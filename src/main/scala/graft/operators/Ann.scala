@@ -114,7 +114,11 @@ object Ann {
     * 6dp `round`, null/short csim sorts LAST (the window's NULLS LAST
     * under desc), ties break to the smallest c_id via the struct
     * ordering of (-csim, c_id), and an empty centroid table yields an
-    * empty result (array_min of the empty array is null → filtered). */
+    * empty result (array_min of the empty array is null → filtered).
+    * One exception: a NaN cosine (a zero-norm vector or centroid, or a
+    * NaN/Inf component) now sorts LAST, so any real-valued centroid
+    * wins over it; the window form sorted NaN FIRST under desc and
+    * picked that centroid. */
   def assignClusters(emb: DataFrame, centroids: DataFrame): DataFrame =
     withClusterId(emb.select(col("vec_id"), col("embedding")), centroids)
       .select(col("vec_id"), col("c_id"))

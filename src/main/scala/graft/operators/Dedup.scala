@@ -132,7 +132,10 @@ object Dedup {
     * narrow `transform`/`array_min` over collected arrays was
     * measured SLOWER: HOF lambdas evaluate interpreted, ~16M evals at
     * sf0.1); collect_list rides the same single shuffle. Signature
-    * longs are bit-equal to [[minhashSignatures]] (DedupSpec law). */
+    * longs are bit-equal to [[minhashSignatures]] (DedupSpec law) for
+    * every non-null `doc_id`. Rows with a null `doc_id` are dropped
+    * here, while [[minhashSignatures]] keeps them as one merged
+    * null-id signature row, so the two differ on such inputs. */
   def docSignatures(shingles: DataFrame, k: Int = 16): DataFrame = {
     val x = col("shingle")
     // Explicit null-id filter (r15): every consumer of this frame joins

@@ -20,11 +20,14 @@ object Graph {
     * note): the default lazy localCheckpoint is executor-local — at the
     * 100 TB design point a lost executor then fails the whole
     * pagerank/hits query instead of recomputing, and unlike the
-    * node/rank pins this one is edge-sized. A cluster deployment that
-    * wants the [[Dedup.components]] lost-executor recovery story sets
-    * `spark.graft.reliableGraphPins=true` to route the edge pin through
+    * node/rank pins this one is edge-sized. Setting
+    * `spark.graft.reliableGraphPins=true` routes the edge pin through
     * the reliable checkpoint dir (one durable edge-table write per
-    * query — the price of recoverability). Local/default behavior is
+    * query). ONLY the edge pin becomes durable: the node/degree pins
+    * and every per-iteration rank pin stay executor-local
+    * localCheckpoints, so a lost executor mid-query still fails
+    * pagerank/hits — this is not yet the [[Dedup.components]]
+    * lost-executor recovery story. Local/default behavior is
     * unchanged, so bench comparability holds. */
   private def pinEdges(df: DataFrame): DataFrame =
     if (df.sparkSession.conf.getOption("spark.graft.reliableGraphPins")

@@ -23,8 +23,13 @@ import scala.jdk.CollectionConverters._
 object Northwind {
 
   val defaultDump = "/root/reference/OLTP_simulator/northwind.sql"
+  /** The converted tables: `$GRAFT_NORTHWIND_DIR`, else the checkout's
+    * `fixtures/northwind` resolved against the working directory (the
+    * checkout root for sbt's forked tests and runs). Always absolute —
+    * the DuckDB oracle SQL embeds it. */
   def fixtureDir: String =
-    sys.env.getOrElse("GRAFT_NORTHWIND_DIR", "/root/repo/fixtures/northwind")
+    sys.env.getOrElse("GRAFT_NORTHWIND_DIR",
+      Paths.get("fixtures/northwind").toAbsolutePath.toString)
 
   private def st(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) })

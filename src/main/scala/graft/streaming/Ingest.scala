@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Structured Streaming surface of the engine (SURVEY §2.9).
   *
@@ -19,21 +21,62 @@ import org.apache.spark.sql.expressions.Window
   */
 object Ingest {
 
+  /** The trigger-and-wait step of every stream here: drain what
+    * exists at start, then stop. */
+  private def awaitDrained(writer: DataStreamWriter[Row]): Unit =
+    writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** The shared exactly-once skeleton (the idempotent-sink-plus-
+    * checkpoint model of Structured Streaming): the checkpoint records
+    * which source files each micro-batch consumed, and `batchFn` gets
+    * the batch with its id. A `batchFn` is replay-safe when it writes
+    * only paths keyed by that id, overwriting — a replay after a crash
+    * between the write and the checkpoint commit then rewrites the
+    * same `batch_id=` partitions instead of duplicating rows — and
+    * reads only state of EARLIER ids ([[earlierBatchPartitions]],
+    * [[latestEarlierBatch]]). */
+  private def drain(stream: DataFrame, checkpoint: String)(
+      batchFn: (DataFrame, Long) => Unit): Unit =
+    awaitDrained(stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(batchFn))
+
+  /** The parquet file source of the streams here: new files under
+    * `srcDir`, read against the explicit `schema`, at most
+    * `maxFilesPerTrigger` per micro-batch; 0 leaves it unbounded. */
+  private def parquetFiles(spark: SparkSession, schema: StructType,
+      srcDir: String, maxFilesPerTrigger: Int): DataFrame = {
+    val reader = spark.readStream.schema(schema)
+    (if (maxFilesPerTrigger > 0)
+      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
+    else reader).parquet(srcDir)
+  }
+
+  /** The stream whose whole per-batch output is one frame: `f` of each
+    * micro-batch lands as an OVERWRITE partition `outDir/batch_id=<id>`
+    * (the [[drain]] replay rule). */
+  private def landEachBatch(spark: SparkSession, schema: StructType,
+      srcDir: String, outDir: String, checkpoint: String,
+      maxFilesPerTrigger: Int)(f: DataFrame => DataFrame): Unit =
+    drain(parquetFiles(spark, schema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      f(batch).write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    }
+
+  private def fileSystem(spark: SparkSession): FileSystem =
+    FileSystem.get(spark.sparkContext.hadoopConfiguration)
+
   /** ST1: incremental ingest — every new file under `srcDir` flows to
     * `outDir` exactly once per checkpoint. `Trigger.AvailableNow`
     * drains what exists and stops, the streaming analog of the
     * reference's hourly batch. */
   def incrementalIngest(spark: SparkSession, schema: StructType,
-      srcDir: String, outDir: String, checkpoint: String): Unit = {
-    val q = spark.readStream.schema(schema).parquet(srcDir)
+      srcDir: String, outDir: String, checkpoint: String): Unit =
+    awaitDrained(parquetFiles(spark, schema, srcDir, 0)
       .writeStream
       .format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      .option("checkpointLocation", checkpoint))
 
   /** JSONL drop-directory ingest — the streamed form of
     * [[graft.sources.Lake.readJsonl]]: shards landing in `srcDir`
@@ -60,22 +103,16 @@ object Ingest {
       if (maxFilesPerTrigger > 0)
         reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
       else reader
-    val q = bounded.json(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = batch.persist()
-        try {
-          b.filter(col(corruptCol).isNull).drop(corruptCol)
-            .write.mode("overwrite").parquet(s"$goodDir/batch_id=$id")
-          b.filter(col(corruptCol).isNotNull)
-            .select(col(corruptCol).as("raw_line"))
-            .write.mode("overwrite").parquet(s"$badDir/batch_id=$id")
-        } finally b.unpersist()
-      }
-      .start()
-    q.awaitTermination()
+    drain(bounded.json(srcDir), checkpoint) { (batch, id) =>
+      val b = batch.persist()
+      try {
+        b.filter(col(corruptCol).isNull).drop(corruptCol)
+          .write.mode("overwrite").parquet(s"$goodDir/batch_id=$id")
+        b.filter(col(corruptCol).isNotNull)
+          .select(col(corruptCol).as("raw_line"))
+          .write.mode("overwrite").parquet(s"$badDir/batch_id=$id")
+      } finally b.unpersist()
+    }
   }
 
   /** ST2: tumbling-window counts with a late-data watermark — the
@@ -433,69 +470,62 @@ object Ingest {
   def cdcUpsertStream(spark: SparkSession, rowSchema: StructType, keyCol: String,
       srcDir: String, outDir: String, checkpoint: String): Unit = {
     // Same pre-start recovery as the partitioned variant: a crash that
-    // parked the whole snapshot must not wait for new data to heal. A
-    // FAILED restore must abort — proceeding would let the in-batch
-    // cleanup delete the parked copy, the only copy of the snapshot.
-    val preFs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val preBak = new org.apache.hadoop.fs.Path(outDir + "_bak")
-    if (preFs.exists(preBak) && !preFs.exists(new org.apache.hadoop.fs.Path(outDir)))
-      require(preFs.rename(preBak, new org.apache.hadoop.fs.Path(outDir)),
-        s"cdcUpsertStream: failed to restore parked snapshot $preBak")
-    val raw = spark.readStream.text(srcDir)
-    val decoded = decodeCdc(raw, rowSchema)
-    val q = decoded.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark2 = batch.sparkSession
-        val fs0 = org.apache.hadoop.fs.FileSystem.get(
-          spark2.sparkContext.hadoopConfiguration)
-        // A crash between park and promote in a previous batch leaves
-        // the snapshot parked aside; restore before reading. The backup
-        // is deleted ONLY once a live snapshot exists — a failed restore
-        // must abort the batch, never delete the only copy.
-        val bak0 = new org.apache.hadoop.fs.Path(outDir + "_bak")
-        if (fs0.exists(bak0)) {
-          if (!fs0.exists(new org.apache.hadoop.fs.Path(outDir)))
-            require(fs0.rename(bak0, new org.apache.hadoop.fs.Path(outDir)),
-              s"cdcUpsertStream: failed to restore parked snapshot $bak0")
-          else fs0.delete(bak0, true)
-        }
-        // Existence is checked explicitly: a missing/empty snapshot
-        // means first batch (merge from empty), but a transient read
-        // ERROR must fail the batch so the checkpoint retries —
-        // swallowing it would silently overwrite the snapshot with
-        // batch-only rows.
-        val existing =
-          if (snapshotExists(fs0, outDir)) Some(spark2.read.parquet(outDir))
-          else None
-        val asChanges = batch.select(col("op"), col("lsn"), col("row"))
-        val merged = existing match {
-          case Some(snap) =>
-            // Snapshot rows re-enter the merge as lsn=-1 upserts, so a
-            // newer change in the batch wins and deletes drop keys.
-            val snapAsChanges = snap.select(lit("r").as("op"), lit(-1L).as("lsn"),
-              struct(snap.columns.toIndexedSeq.map(col): _*).as("row"))
-            latestPerKey(snapAsChanges.unionByName(asChanges), keyCol)
-          case None => latestPerKey(asChanges, keyCol)
-        }
-        val tmp = outDir + "_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        // Park-then-promote (never delete-then-rename): a crash leaves
-        // the old snapshot either live or parked, and the next batch
-        // restores it — no window where the snapshot is simply gone.
-        val dst = new org.apache.hadoop.fs.Path(outDir)
-        if (fs0.exists(dst))
-          require(fs0.rename(dst, bak0), s"cdcUpsertStream: failed to park $dst")
-        require(fs0.rename(new org.apache.hadoop.fs.Path(tmp), dst),
-          s"cdcUpsertStream: failed to promote $tmp")
-        fs0.delete(bak0, true)
-        ()
+    // parked the whole snapshot must not wait for new data to heal.
+    restoreParkedSnapshot(fileSystem(spark), outDir)
+    val decoded = decodeCdc(spark.readStream.text(srcDir), rowSchema)
+    drain(decoded, checkpoint) { (batch, _) =>
+      val spark2 = batch.sparkSession
+      val fs0 = fileSystem(spark2)
+      restoreParkedSnapshot(fs0, outDir)
+      // Existence is checked explicitly: a missing/empty snapshot
+      // means first batch (merge from empty), but a transient read
+      // ERROR must fail the batch so the checkpoint retries —
+      // swallowing it would silently overwrite the snapshot with
+      // batch-only rows.
+      val existing =
+        if (snapshotExists(fs0, outDir)) Some(spark2.read.parquet(outDir))
+        else None
+      val asChanges = batch.select(col("op"), col("lsn"), col("row"))
+      val merged = existing match {
+        case Some(snap) =>
+          // Snapshot rows re-enter the merge as lsn=-1 upserts, so a
+          // newer change in the batch wins and deletes drop keys.
+          val snapAsChanges = snap.select(lit("r").as("op"), lit(-1L).as("lsn"),
+            struct(snap.columns.toIndexedSeq.map(col): _*).as("row"))
+          latestPerKey(snapAsChanges.unionByName(asChanges), keyCol)
+        case None => latestPerKey(asChanges, keyCol)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      val tmp = outDir + "_tmp"
+      merged.write.mode("overwrite").parquet(tmp)
+      // Park-then-promote (never delete-then-rename): a crash leaves
+      // the old snapshot either live or parked, and the next call
+      // restores it — no window where the snapshot is simply gone.
+      val dst = new Path(outDir)
+      val bak0 = new Path(outDir + "_bak")
+      if (fs0.exists(dst))
+        require(fs0.rename(dst, bak0), s"cdcUpsertStream: failed to park $dst")
+      require(fs0.rename(new Path(tmp), dst),
+        s"cdcUpsertStream: failed to promote $tmp")
+      fs0.delete(bak0, true)
+    }
+  }
+
+  /** Recovery for [[cdcUpsertStream]]'s whole-snapshot swap, run
+    * before the stream starts and again before each batch reads: a
+    * crash between park and promote leaves the snapshot parked at
+    * `<outDir>_bak` with no live dir — move it back. The backup is
+    * deleted ONLY once a live snapshot exists (the crash hit after
+    * promote, before cleanup); a FAILED restore must abort, because
+    * proceeding would let the batch's cleanup delete the parked copy,
+    * the only copy of the snapshot. */
+  private def restoreParkedSnapshot(fs: FileSystem, outDir: String): Unit = {
+    val bak = new Path(outDir + "_bak")
+    if (fs.exists(bak)) {
+      if (!fs.exists(new Path(outDir)))
+        require(fs.rename(bak, new Path(outDir)),
+          s"cdcUpsertStream: failed to restore parked snapshot $bak")
+      else fs.delete(bak, true)
+    }
   }
 
   /** ST3c at scale: keep-latest upsert over a KEY-HASH-PARTITIONED
@@ -535,55 +565,57 @@ object Ingest {
     // Recover a crashed swap BEFORE the stream starts too: with no new
     // data, no batch would run, and readers would otherwise see the
     // snapshot missing a parked bucket indefinitely.
-    restoreParkedBuckets(org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration), outDir)
-    val decoded = decodeCdc(raw, rowSchema)
-    val q = decoded.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark2 = batch.sparkSession
-        val kb = pmod(hash(col(s"row.$keyCol")), lit(nBuckets))
-        val asChanges = batch.select(col("op"), col("lsn"), col("row"))
-          .withColumn("kb", kb)
-        val touched = asChanges.select("kb").distinct()
-          .collect().map(_.getInt(0)).sorted
-        if (touched.nonEmpty) {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            spark2.sparkContext.hadoopConfiguration)
-          // A crash mid-swap in a previous batch leaves buckets parked in
-          // the backup dir; restore them BEFORE reading the snapshot so a
-          // checkpoint replay merges against the full pre-batch state.
-          restoreParkedBuckets(fs, outDir)
-          // Missing/empty snapshot = first batch; a transient read
-          // error must fail the batch (checkpoint retries) rather than
-          // be treated as empty — that would drop every existing key
-          // in the touched buckets.
-          val existing =
-            if (snapshotExists(fs, outDir)) Some(spark2.read.parquet(outDir))
-            else None
-          val merged = existing match {
-            case Some(snap) =>
-              val touchedSnap = snap.filter(
-                col("kb").isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
-              val dataCols = snap.columns.filterNot(_ == "kb").toIndexedSeq
-              val snapAsChanges = touchedSnap.select(
-                lit("r").as("op"), lit(-1L).as("lsn"),
-                struct(dataCols.map(col): _*).as("row"), col("kb").cast("int").as("kb"))
-              latestPerKeyKeepBucket(snapAsChanges.unionByName(asChanges), keyCol)
-            case None => latestPerKeyKeepBucket(asChanges, keyCol)
-          }
-          val tmp = outDir + "_tmp"
-          fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-          merged.write.partitionBy("kb").mode("overwrite").parquet(tmp)
-          promoteTouchedBuckets(fs, outDir, tmp, touched.toIndexedSeq,
-            "cdcUpsertStreamPartitioned")
-        }
-        ()
+    restoreParkedBuckets(fileSystem(spark), outDir)
+    drain(decodeCdc(raw, rowSchema), checkpoint) { (batch, _) =>
+      val asChanges = batch.select(col("op"), col("lsn"), col("row"))
+        .withColumn("kb", pmod(hash(col(s"row.$keyCol")), lit(nBuckets)))
+      swapTouchedBuckets(asChanges, outDir, "cdcUpsertStreamPartitioned") {
+        case Some(touchedSnap) =>
+          val dataCols = touchedSnap.columns.filterNot(_ == "kb").toIndexedSeq
+          val snapAsChanges = touchedSnap.select(
+            lit("r").as("op"), lit(-1L).as("lsn"),
+            struct(dataCols.map(col): _*).as("row"), col("kb").cast("int").as("kb"))
+          latestPerKeyKeepBucket(snapAsChanges.unionByName(asChanges), keyCol)
+        case None => latestPerKeyKeepBucket(asChanges, keyCol)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
+  }
+
+  /** One batch of a key-hash-bucketed snapshot update — the shared
+    * body of [[cdcUpsertPartitionedFrom]] and
+    * [[funnelIngestStreamPartitioned]]. `keyed` carries the batch's
+    * `kb` bucket column; its distinct buckets (≤ nBuckets values — the
+    * one driver-side collect, bounded by the layout, never by data)
+    * are the only ones read and rewritten. `merge` gets the snapshot's
+    * rows in those buckets (None on the first batch) and returns the
+    * new rows of those buckets, `kb` included; they are written once,
+    * partitioned, to `<outDir>_tmp` and swapped in by
+    * [[promoteTouchedBuckets]]. A batch with no rows touches nothing. */
+  private def swapTouchedBuckets(keyed: DataFrame, outDir: String,
+      what: String)(merge: Option[DataFrame] => DataFrame): Unit = {
+    val touched = keyed.select("kb").distinct()
+      .collect().map(_.getInt(0)).sorted.toIndexedSeq
+    if (touched.nonEmpty) {
+      val ss = keyed.sparkSession
+      val fs = fileSystem(ss)
+      // A crash mid-swap in a previous batch leaves buckets parked in
+      // the backup dir; restore them BEFORE reading the snapshot so a
+      // checkpoint replay merges against the full pre-batch state.
+      restoreParkedBuckets(fs, outDir)
+      // Missing/empty snapshot = first batch; a transient read
+      // error must fail the batch (checkpoint retries) rather than
+      // be treated as empty — that would drop every existing key
+      // in the touched buckets.
+      val prior =
+        if (snapshotExists(fs, outDir))
+          Some(ss.read.parquet(outDir)
+            .filter(col("kb").isin(touched.map(Integer.valueOf): _*)))
+        else None
+      val tmp = outDir + "_tmp"
+      fs.delete(new Path(tmp), true)
+      merge(prior).write.partitionBy("kb").mode("overwrite").parquet(tmp)
+      promoteTouchedBuckets(fs, outDir, tmp, touched, what)
+    }
   }
 
   /** Park-then-promote swap of the touched `kb=` buckets from a
@@ -598,23 +630,23 @@ object Ingest {
     * the bucket, or — if the park failed and dst still exists — nest
     * the new directory INSIDE the old one. A throw aborts the batch
     * before any delete; restoreParkedBuckets heals on the next start. */
-  private def promoteTouchedBuckets(fs: org.apache.hadoop.fs.FileSystem,
+  private def promoteTouchedBuckets(fs: FileSystem,
       outDir: String, tmp: String, touched: Seq[Int], what: String): Unit = {
-    val bak = new org.apache.hadoop.fs.Path(outDir + "_bak")
+    val bak = new Path(outDir + "_bak")
     fs.delete(bak, true)
     fs.mkdirs(bak)
     touched.foreach { b =>
-      val src = new org.apache.hadoop.fs.Path(s"$tmp/kb=$b")
-      val dst = new org.apache.hadoop.fs.Path(s"$outDir/kb=$b")
+      val src = new Path(s"$tmp/kb=$b")
+      val dst = new Path(s"$outDir/kb=$b")
       fs.mkdirs(dst.getParent)
       if (fs.exists(dst))
-        require(fs.rename(dst, new org.apache.hadoop.fs.Path(bak, s"kb=$b")),
+        require(fs.rename(dst, new Path(bak, s"kb=$b")),
           s"$what: failed to park $dst")
       if (fs.exists(src))
         require(fs.rename(src, dst), s"$what: failed to promote $src")
     }
     fs.delete(bak, true)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    fs.delete(new Path(tmp), true)
   }
 
   /** A snapshot "exists" only if its directory holds any non-hidden
@@ -622,9 +654,9 @@ object Ingest {
     * often pre-create the output dir), while a transient READ error on
     * real data must still fail the batch — only this narrow
     * no-data-yet case merges from empty. */
-  private def snapshotExists(fs: org.apache.hadoop.fs.FileSystem,
+  private def snapshotExists(fs: FileSystem,
       dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     fs.exists(p) && fs.listStatus(p).exists { st =>
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
@@ -638,12 +670,12 @@ object Ingest {
     * backup cleanup); the promoted data wins and the replayed merge is
     * idempotent against it (re-applying the same changes keep-latest
     * yields the same snapshot). */
-  private[graft] def restoreParkedBuckets(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def restoreParkedBuckets(fs: FileSystem,
       outDir: String): Unit = {
-    val bak = new org.apache.hadoop.fs.Path(outDir + "_bak")
+    val bak = new Path(outDir + "_bak")
     if (fs.exists(bak)) {
       fs.listStatus(bak).filter(_.getPath.getName.startsWith("kb=")).foreach { st =>
-        val live = new org.apache.hadoop.fs.Path(outDir, st.getPath.getName)
+        val live = new Path(outDir, st.getPath.getName)
         if (!fs.exists(live)) {
           fs.mkdirs(live.getParent)
           require(fs.rename(st.getPath, live),
@@ -683,9 +715,8 @@ object Ingest {
     * earlier partition exists. */
   private def earlierBatchPartitions(spark: SparkSession, path: String,
       id: Long, what: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val entries = batchIdEntries(fs, new org.apache.hadoop.fs.Path(path), what)
+    val fs = fileSystem(spark)
+    val entries = batchIdEntries(fs, new Path(path), what)
     val earlier = entries.exists(_.stripPrefix("batch_id=").toLong < id)
     if (earlier) Some(spark.read.parquet(path).filter(col("batch_id") < id))
     else None
@@ -700,9 +731,8 @@ object Ingest {
     * identical. */
   private def latestEarlierBatch(spark: SparkSession, path: String,
       id: Long, what: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val earlier = batchIdEntries(fs, new org.apache.hadoop.fs.Path(path), what)
+    val fs = fileSystem(spark)
+    val earlier = batchIdEntries(fs, new Path(path), what)
       .map(_.stripPrefix("batch_id=").toLong)
       .filter(_ < id)
     if (earlier.isEmpty) None
@@ -712,8 +742,8 @@ object Ingest {
   /** List a dir's batch_id= partition names, rejecting foreign entries
     * loudly — the shared layout check of [[earlierBatchPartitions]] /
     * [[latestEarlierBatch]] and the maintenance ops below. */
-  private def batchIdEntries(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, what: String): Seq[String] = {
+  private def batchIdEntries(fs: FileSystem,
+      p: Path, what: String): Seq[String] = {
     val entries =
       if (fs.exists(p))
         fs.listStatus(p).map(_.getPath.getName)
@@ -760,10 +790,9 @@ object Ingest {
   def compactStreamState(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20): Long = {
     val what = "compactStreamState"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + "_compact_bak")
+    val fs = fileSystem(spark)
+    val p = new Path(path)
+    val bak = new Path(path + "_compact_bak")
     // heal a crash caught between park and promote
     if (!fs.exists(p) && fs.exists(bak))
       require(fs.rename(bak, p), s"$what: failed to restore $bak")
@@ -774,7 +803,7 @@ object Ingest {
     val bytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1L,
       (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tmp = new org.apache.hadoop.fs.Path(path + "_compact_tmp")
+    val tmp = new Path(path + "_compact_tmp")
     fs.delete(tmp, true)
     val all = spark.read.parquet(path)
     if (ids.size > 1)
@@ -810,14 +839,13 @@ object Ingest {
       keepLast: Int = 2): (Seq[Long], Seq[Long]) = {
     require(keepLast >= 1, "keepLast must be positive")
     val what = "vacuumStreamSnapshots"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = fileSystem(spark)
+    val p = new Path(path)
     val ids = batchIdEntries(fs, p, what)
       .map(_.stripPrefix("batch_id=").toLong).sorted
     val (drop, keep) = ids.splitAt(0.max(ids.size - math.max(keepLast, 2)))
     drop.foreach { id =>
-      val part = new org.apache.hadoop.fs.Path(s"$path/batch_id=$id")
+      val part = new Path(s"$path/batch_id=$id")
       require(fs.delete(part, true), s"$what: failed to delete $part")
     }
     (keep, drop)
@@ -842,35 +870,24 @@ object Ingest {
       srcDir: String, statePath: String, checkpoint: String,
       steps: Seq[String], userCol: String = "user_id",
       typeCol: String = "event_type", tsCol: String = "ts",
-      within: Option[String] = None, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val ss = batch.sparkSession
-        import graft.operators.Behavior
-        val prior = latestEarlierBatch(ss, statePath, id,
-            "funnelIngestStream state")
-          .getOrElse(Behavior.emptyFunnelState(batch, steps, userCol, tsCol))
-        Behavior.funnelUsersStep(prior, batch, steps, userCol, typeCol,
-            tsCol, within)
-          .write.mode("overwrite").parquet(s"$statePath/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      within: Option[String] = None, maxFilesPerTrigger: Int = 1): Unit =
+    drain(parquetFiles(spark, schema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      import graft.operators.Behavior
+      val prior = latestEarlierBatch(batch.sparkSession, statePath, id,
+          "funnelIngestStream state")
+        .getOrElse(Behavior.emptyFunnelState(batch, steps, userCol, tsCol))
+      Behavior.funnelUsersStep(prior, batch, steps, userCol, typeCol,
+          tsCol, within)
+        .write.mode("overwrite").parquet(s"$statePath/batch_id=$id")
+    }
 
   /** The current funnel state (the latest landed snapshot) — feed to
     * [[graft.operators.Behavior.funnelCountsFromUsers]] for the
     * dashboard summary. */
   def funnelStateSnapshot(spark: SparkSession, statePath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(statePath)
+    val fs = fileSystem(spark)
+    val p = new Path(statePath)
     val ids =
       if (fs.exists(p)) fs.listStatus(p)
         .map(_.getPath.getName).filter(_.startsWith("batch_id="))
@@ -901,44 +918,20 @@ object Ingest {
       typeCol: String = "event_type", tsCol: String = "ts",
       within: Option[String] = None, nBuckets: Int = 16,
       maxFilesPerTrigger: Int = 1): Unit = {
-    restoreParkedBuckets(org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration), outDir)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        import graft.operators.Behavior
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          ss.sparkContext.hadoopConfiguration)
-        val kb = pmod(hash(col(userCol)), lit(nBuckets))
-        val touched = batch.select(kb.as("kb")).distinct()
-          .collect().map(_.getInt(0)).sorted
-        if (touched.nonEmpty) {
-          restoreParkedBuckets(fs, outDir)
-          val prior =
-            if (snapshotExists(fs, outDir))
-              ss.read.parquet(outDir)
-                .filter(col("kb")
-                  .isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
-                .drop("kb")
-            else Behavior.emptyFunnelState(batch, steps, userCol, tsCol)
-          val merged = Behavior.funnelUsersStep(prior, batch, steps,
-              userCol, typeCol, tsCol, within)
-            .withColumn("kb", pmod(hash(col(userCol)), lit(nBuckets)))
-          val tmp = outDir + "_tmp"
-          fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-          merged.write.partitionBy("kb").mode("overwrite").parquet(tmp)
-          promoteTouchedBuckets(fs, outDir, tmp, touched.toIndexedSeq,
-            "funnelIngestStreamPartitioned")
-        }
-        ()
+    import graft.operators.Behavior
+    restoreParkedBuckets(fileSystem(spark), outDir)
+    val kb = pmod(hash(col(userCol)), lit(nBuckets))
+    drain(parquetFiles(spark, schema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, _) =>
+      swapTouchedBuckets(batch.select(kb.as("kb")), outDir,
+          "funnelIngestStreamPartitioned") { touchedSnap =>
+        val prior = touchedSnap.map(_.drop("kb"))
+          .getOrElse(Behavior.emptyFunnelState(batch, steps, userCol, tsCol))
+        Behavior.funnelUsersStep(prior, batch, steps, userCol, typeCol,
+            tsCol, within)
+          .withColumn("kb", kb)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming transition counts: each micro-batch lands its OWN
@@ -960,41 +953,32 @@ object Ingest {
   def transitionIngestStream(spark: SparkSession, schema: StructType,
       srcDir: String, outPath: String, checkpoint: String,
       userCol: String = "user_id", typeCol: String = "event_type",
-      tsCol: String = "ts", maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val ss = batch.sparkSession
-        import graft.operators.Behavior
-        // Pinned: the prior state feeds BOTH the bridge pairs and the
-        // state fold (two consumers — the erIngestStream discipline);
-        // users-sized by construction.
-        val prior = latestEarlierBatch(ss, s"$outPath/last", id,
-            "transitionIngestStream last")
-          .getOrElse(Behavior.emptyLastEvents(batch, userCol, typeCol, tsCol))
-          .localCheckpoint(true)
+      tsCol: String = "ts", maxFilesPerTrigger: Int = 1): Unit =
+    drain(parquetFiles(spark, schema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      import graft.operators.Behavior
+      // Pinned: the prior state feeds BOTH the bridge pairs and the
+      // state fold (two consumers — the erIngestStream discipline);
+      // users-sized by construction.
+      val prior = latestEarlierBatch(batch.sparkSession, s"$outPath/last", id,
+          "transitionIngestStream last")
+        .getOrElse(Behavior.emptyLastEvents(batch, userCol, typeCol, tsCol))
+        .localCheckpoint(true)
+      try {
+        val b = batch.localCheckpoint(true)
         try {
-          val b = batch.localCheckpoint(true)
-          try {
-            val pairs = Behavior.transitionPairs(b, userCol, typeCol, tsCol)
-              .unionByName(Behavior.transitionBridgePairs(prior, b, userCol,
-                typeCol, tsCol))
-              .groupBy("from_type", "to_type")
-              .agg(sum("n").cast("long").as("n"))
-            pairs.write.mode("overwrite")
-              .parquet(s"$outPath/pairs/batch_id=$id")
-            Behavior.lastEventsStep(prior, b, userCol, typeCol, tsCol)
-              .write.mode("overwrite").parquet(s"$outPath/last/batch_id=$id")
-          } finally { b.unpersist(); () }
-        } finally { prior.unpersist(); () }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+          val pairs = Behavior.transitionPairs(b, userCol, typeCol, tsCol)
+            .unionByName(Behavior.transitionBridgePairs(prior, b, userCol,
+              typeCol, tsCol))
+            .groupBy("from_type", "to_type")
+            .agg(sum("n").cast("long").as("n"))
+          pairs.write.mode("overwrite")
+            .parquet(s"$outPath/pairs/batch_id=$id")
+          Behavior.lastEventsStep(prior, b, userCol, typeCol, tsCol)
+            .write.mode("overwrite").parquet(s"$outPath/last/batch_id=$id")
+        } finally { b.unpersist(); () }
+      } finally { prior.unpersist(); () }
+    }
 
   /** The corpus-lifetime transition matrix from the landed per-batch
     * pair counts: one sum + row-normalize
@@ -1023,68 +1007,57 @@ object Ingest {
       schema: StructType, srcDir: String, outPath: String,
       checkpoint: String, userCol: String = "user_id",
       typeCol: String = "event_type", tsCol: String = "ts",
-      nBuckets: Int = 16, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val ss = batch.sparkSession
-        import graft.operators.Behavior
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          ss.sparkContext.hadoopConfiguration)
-        val kbOf = pmod(hash(col("u")), lit(nBuckets))
-        val touched = batch
-          .select(pmod(hash(col(userCol)), lit(nBuckets)).as("kb"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        if (touched.nonEmpty) {
-          val prior = touched.toIndexedSeq
-            .flatMap(bk => latestEarlierBatch(ss, s"$outPath/last/kb=$bk",
-              id, "transitionIngestStreamPartitioned last"))
-            .reduceOption(_ unionByName _)
-            .getOrElse(Behavior.emptyLastEvents(batch, userCol, typeCol,
-              tsCol))
-            .localCheckpoint(true)
+      nBuckets: Int = 16, maxFilesPerTrigger: Int = 1): Unit =
+    drain(parquetFiles(spark, schema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      val ss = batch.sparkSession
+      import graft.operators.Behavior
+      val fs = fileSystem(ss)
+      val kbOf = pmod(hash(col("u")), lit(nBuckets))
+      val touched = batch
+        .select(pmod(hash(col(userCol)), lit(nBuckets)).as("kb"))
+        .distinct().collect().map(_.getInt(0)).sorted
+      if (touched.nonEmpty) {
+        val prior = touched.toIndexedSeq
+          .flatMap(bk => latestEarlierBatch(ss, s"$outPath/last/kb=$bk",
+            id, "transitionIngestStreamPartitioned last"))
+          .reduceOption(_ unionByName _)
+          .getOrElse(Behavior.emptyLastEvents(batch, userCol, typeCol,
+            tsCol))
+          .localCheckpoint(true)
+        try {
+          val b = batch.localCheckpoint(true)
           try {
-            val b = batch.localCheckpoint(true)
-            try {
-              Behavior.transitionPairs(b, userCol, typeCol, tsCol)
-                .unionByName(Behavior.transitionBridgePairs(prior, b,
-                  userCol, typeCol, tsCol))
-                .groupBy("from_type", "to_type")
-                .agg(sum("n").cast("long").as("n"))
-                .write.mode("overwrite")
-                .parquet(s"$outPath/pairs/batch_id=$id")
-              // One partitioned staging write, then a rename per
-              // touched bucket into its layer slot — not one Spark job
-              // per bucket. Replay deletes and re-renames each slot,
-              // so a crash mid-loop is invisible to the next attempt.
-              val tmp = s"$outPath/last_tmp"
-              fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-              Behavior.lastEventsStep(prior, b, userCol, typeCol, tsCol)
-                .withColumn("kb", kbOf)
-                .write.partitionBy("kb").mode("overwrite").parquet(tmp)
-              touched.foreach { bk =>
-                val src = new org.apache.hadoop.fs.Path(s"$tmp/kb=$bk")
-                val dst = new org.apache.hadoop.fs.Path(
-                  s"$outPath/last/kb=$bk/batch_id=$id")
-                fs.delete(dst, true)
-                fs.mkdirs(dst.getParent)
-                if (fs.exists(src))
-                  require(fs.rename(src, dst),
-                    s"transitionIngestStreamPartitioned: failed to land $dst")
-              }
-              fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-            } finally { b.unpersist(); () }
-          } finally { prior.unpersist(); () }
-        }
-        ()
+            Behavior.transitionPairs(b, userCol, typeCol, tsCol)
+              .unionByName(Behavior.transitionBridgePairs(prior, b,
+                userCol, typeCol, tsCol))
+              .groupBy("from_type", "to_type")
+              .agg(sum("n").cast("long").as("n"))
+              .write.mode("overwrite")
+              .parquet(s"$outPath/pairs/batch_id=$id")
+            // One partitioned staging write, then a rename per
+            // touched bucket into its layer slot — not one Spark job
+            // per bucket. Replay deletes and re-renames each slot,
+            // so a crash mid-loop is invisible to the next attempt.
+            val tmp = s"$outPath/last_tmp"
+            fs.delete(new Path(tmp), true)
+            Behavior.lastEventsStep(prior, b, userCol, typeCol, tsCol)
+              .withColumn("kb", kbOf)
+              .write.partitionBy("kb").mode("overwrite").parquet(tmp)
+            touched.foreach { bk =>
+              val src = new Path(s"$tmp/kb=$bk")
+              val dst = new Path(s"$outPath/last/kb=$bk/batch_id=$id")
+              fs.delete(dst, true)
+              fs.mkdirs(dst.getParent)
+              if (fs.exists(src))
+                require(fs.rename(src, dst),
+                  s"transitionIngestStreamPartitioned: failed to land $dst")
+            }
+            fs.delete(new Path(tmp), true)
+          } finally { b.unpersist(); () }
+        } finally { prior.unpersist(); () }
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Streaming cohort retention: each micro-batch lands its OWN
     * distinct (u, bucket) activity cells
@@ -1101,21 +1074,11 @@ object Ingest {
   def retentionCellsStream(spark: SparkSession, schema: StructType,
       srcDir: String, outDir: String, checkpoint: String,
       period: String = "week", userCol: String = "user_id",
-      tsCol: String = "ts", maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Behavior.activityCells(batch, period, userCol, tsCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      tsCol: String = "ts", maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, schema, srcDir, outDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Behavior.activityCells(batch, period, userCol, tsCol)
+    }
 
   /** Cohort retention over the landed activity cells. */
   def retentionSnapshot(spark: SparkSession, outDir: String,
@@ -1125,41 +1088,33 @@ object Ingest {
 
   def dedupIngestStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, corpusDir: String, indexPath: String, checkpoint: String,
-      maxBucket: Int = 100, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val idx = earlierBatchPartitions(batch.sparkSession, indexPath, id,
-          "dedupIngestStream index")
-        val survivors = idx match {
-          case Some(i) => graft.operators.Dedup.dedupAgainstIndexBands(batch, i, maxBucket)
-          case None =>
-            val pairs = graft.operators.Dedup.lshCandidates(
-              graft.operators.Dedup.lshBands(graft.operators.Dedup.minhashSignatures(
-                graft.operators.Dedup.shingleHashes(batch), hashed = true)), maxBucket)
-            graft.operators.Dedup.survivors(batch, pairs)
-        }
-        // Materialize survivors EAGERLY before touching the index: the
-        // survivor plan READS indexPath, and the band write mutates it —
-        // a lazy plan would re-run the dedup against the half-mutated
-        // index. Both sinks are per-batch OVERWRITE partitions keyed by
-        // the batch id, so checkpoint replay is idempotent (a plain
-        // append would double rows on retry).
-        val kept = survivors.localCheckpoint(true)
-        try {
-          kept.write.mode("overwrite").parquet(s"$corpusDir/batch_id=$id")
-          graft.operators.Dedup.lshBands(graft.operators.Dedup.minhashSignatures(
-              graft.operators.Dedup.shingleHashes(kept), hashed = true))
-            .write.mode("overwrite").parquet(s"$indexPath/batch_id=$id")
-        } finally { kept.unpersist(); () }
+      maxBucket: Int = 100, maxFilesPerTrigger: Int = 1): Unit =
+    drain(parquetFiles(spark, docSchema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      val idx = earlierBatchPartitions(batch.sparkSession, indexPath, id,
+        "dedupIngestStream index")
+      val survivors = idx match {
+        case Some(i) => graft.operators.Dedup.dedupAgainstIndexBands(batch, i, maxBucket)
+        case None =>
+          val pairs = graft.operators.Dedup.lshCandidates(
+            graft.operators.Dedup.lshBands(graft.operators.Dedup.minhashSignatures(
+              graft.operators.Dedup.shingleHashes(batch), hashed = true)), maxBucket)
+          graft.operators.Dedup.survivors(batch, pairs)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      // Materialize survivors EAGERLY before touching the index: the
+      // survivor plan READS indexPath, and the band write mutates it —
+      // a lazy plan would re-run the dedup against the half-mutated
+      // index. Both sinks are per-batch OVERWRITE partitions keyed by
+      // the batch id, so checkpoint replay is idempotent (a plain
+      // append would double rows on retry).
+      val kept = survivors.localCheckpoint(true)
+      try {
+        kept.write.mode("overwrite").parquet(s"$corpusDir/batch_id=$id")
+        graft.operators.Dedup.lshBands(graft.operators.Dedup.minhashSignatures(
+            graft.operators.Dedup.shingleHashes(kept), hashed = true))
+          .write.mode("overwrite").parquet(s"$indexPath/batch_id=$id")
+      } finally { kept.unpersist(); () }
+    }
 
   /** The WHOLE incremental curation chain in one stream — gate →
     * near-dup dedup against a persisted band index → optional
@@ -1224,164 +1179,157 @@ object Ingest {
     import graft.functions.TextAnalysis
     require(boilerplateMaxDocs.isEmpty || passageIndexPath.nonEmpty,
       "boilerplateMaxDocs needs a passageIndexPath for cross-batch dfs")
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batchIn: DataFrame, id: Long) =>
-        // 0. optional zeroth stages, exactly as in Curate.run: the
-        // blocklist verdict is a pure function of each doc's own URL
-        // against the fixed broadcast list, and the two text stages
-        // are pure per-row projections — no cross-batch state, so the
-        // stream==batch law extends to all three for free.
-        val batchRaw = blocklist match {
-          case None => batchIn
-          case Some(bl) => batchIn.join(
-            graft.operators.Quality.blocklistFilter(batchIn, bl)
-              .filter(col("kept")).select("doc_id"), "doc_id")
-        }
-        val batch0 =
-          if (!extractHtml) batchRaw
-          else batchRaw.withColumn("text", TextAnalysis.htmlToText(col("text")))
-        val batch =
-          if (!normalize) batch0
-          else batch0.withColumn("text", TextAnalysis.normalizeText(col("text")))
-        val ss = batch.sparkSession
-        // 1. gate — batch-local narrow decision either way: the rule
-        // gate, or (as in Curate.run) the learned filter's logit > 0
-        // verdict under fixed trained weights, which is a pure
-        // function of each doc's own text and so carries no
-        // cross-batch state to reconcile.
-        val gateKept = gateWeights match {
-          case None => TextAnalysis.qualityGate(batch).filter(col("kept"))
-          case Some(w) => TextAnalysis.scoreQualityLogreg(
-            TextAnalysis.qualityFeatures(batch), w).filter(col("kept"))
-        }
-        val gatedRaw = batch.join(gateKept.select("doc_id"), "doc_id")
-        // With the boilerplate stage on, gated has three consumers —
-        // the strip report's segment pass, the text-restore join side,
-        // and the passage-index sink — so checkpoint it (same file
-        // invariant as Curate's gatedRaw); otherwise the gate's two
-        // text passes re-run for each consumer.
-        val gated =
-          if (boilerplateMaxDocs.isDefined) gatedRaw.localCheckpoint(true)
-          else gatedRaw
-        // 1b. optional boilerplate strip vs the earlier batches' dfs.
-        // Materialized EAGERLY when on: the strip plan reads
-        // passageIndexPath and the index sink below mutates it.
-        val curated = boilerplateMaxDocs match {
-          case None => gated
-          case Some(m) =>
-            val pIdx = earlierBatchPartitions(ss, passageIndexPath, id,
-              "curateIngestStream passage index")
-            val report = pIdx match {
-              case Some(i) => Dedup.stripBoilerplateAgainstIndex(gated, i, m)
-              case None =>
-                // Only the stream's FIRST batch may screen batch-
-                // locally (there are no earlier dfs by definition).
-                // At id > 0 a missing index means the stage was
-                // enabled mid-stream or the path is wrong/cleared —
-                // either way the cross-batch df law cannot hold, and
-                // degrading silently would keep corpus-wide
-                // boilerplate. Fail loudly (repo convention).
-                require(id == 0L,
-                  s"curateIngestStream: boilerplate stage is on but " +
-                    s"$passageIndexPath has no batch_id < $id partitions; " +
-                    "the cross-batch passage-df law cannot hold (stage " +
-                    "enabled mid-stream, or wrong/cleared index path). " +
-                    "Restart from a fresh checkpoint with the stage on, " +
-                    "or restore the index.")
-                Dedup.stripBoilerplate(gated, m)
-            }
-            gated.drop("text")
-              .join(report.filter(col("clean_text") =!= "")
-                .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
-              .select(gated.columns.map(col).toIndexedSeq: _*)
-              .localCheckpoint(true)
-        }
-        // 2. dedup on the md5-prefix surrogate id (keep-first-arrived)
-        val relabeled = curated
-          .withColumn("orig_id", col("doc_id"))
-          .withColumn("doc_id",
-            conv(substring(md5(col("orig_id").cast("string")), 1, 15), 16, 10)
-              .cast("long"))
-        val idx = earlierBatchPartitions(ss, indexPath, id, "curateIngestStream index")
-        val survPlan = idx match {
-          case Some(i) => Dedup.dedupAgainstIndexBands(relabeled, i, maxBucket)
-          case None =>
-            val pairs = Dedup.lshCandidates(Dedup.lshBands(Dedup.minhashSignatures(
-              Dedup.shingleHashes(relabeled), hashed = true)), maxBucket)
-            Dedup.survivors(relabeled, pairs)
-        }
-        // Materialize eagerly before any sink mutates a dir the plans
-        // read (index for survivors, stateDir for the budget join).
-        val surv = survPlan.localCheckpoint(true)
-        // 2b. optional span-level decontamination (the Curate.run
-        // stage order: dedup first, then scrub): per-doc pure against
-        // the FIXED held-out frame's shingle set, so batch-local
-        // application IS the batch composition restricted to the
-        // batch — no cross-batch state, the stream==batch law extends
-        // for free. Runs AFTER dedup so the band index below still
-        // represents the text dedup compared; docs emptied by the
-        // scrub drop here and never reach the budget walk.
-        val cleaned = spanDecontaminate match {
-          case None => surv
-          case Some((heldout, nGram)) => surv.drop("text")
-            .join(Dedup.decontaminateSpans(surv, heldout, nGram)
-              .filter(col("clean_text") =!= "")
-              .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
-            .select(surv.columns.map(col).toIndexedSeq: _*)
-            .localCheckpoint(true)
-        }
-        try {
-          // 3. budget — md5 walk within the batch over prior state
-          val prior = earlierBatchPartitions(ss, stateDir, id, "curateIngestStream state")
-            .map(_.groupBy("domain")
-              .agg(max(struct(col("batch_id"), col("cum"))).as("m"))
-              .select(col("domain"), col("m.cum").as("prev")))
-          val w = Window.partitionBy("domain").orderBy("h", "doc_id")
-          val scored = cleaned.select(col(domainCol).as("domain"),
-              col("orig_id").as("doc_id"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"),
-              md5(col("orig_id").cast("string")).as("h"))
-            .withColumn("cum0", sum("n_tok").over(w) - col("n_tok"))
-          val withPrev = prior match {
-            case Some(p) => scored.join(p, Seq("domain"), "left")
-              .withColumn("prev", coalesce(col("prev"), lit(0L)))
-            case None => scored.withColumn("prev", lit(0L))
-          }
-          val accepted = withPrev
-            .filter(col("prev") + col("cum0") < budgetTokens)
-            .select(col("domain"), col("doc_id"), col("n_tok"),
-              (col("prev") + col("cum0") + col("n_tok")).as("cum"))
-            .localCheckpoint(true)
-          try {
-            accepted.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-            accepted.groupBy("domain").agg(max("cum").as("cum"))
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$stateDir/batch_id=$id")
-            // the index carries ALL dedup survivors (budget-rejected
-            // docs still suppress future duplicates of themselves)
-            Dedup.lshBands(Dedup.minhashSignatures(
-                Dedup.shingleHashes(surv), hashed = true))
-              .write.mode("overwrite").parquet(s"$indexPath/batch_id=$id")
-            // passage dfs of the batch's GATED (pre-strip) text — the
-            // one-shot law segments every doc's original gated text,
-            // so that is what later batches must count against
-            if (boilerplateMaxDocs.isDefined)
-              Dedup.writePassageIndex(gated, s"$passageIndexPath/batch_id=$id")
-          } finally { accepted.unpersist(); () }
-        } finally {
-          surv.unpersist()
-          if (spanDecontaminate.isDefined) { cleaned.unpersist(); () }
-          if (boilerplateMaxDocs.isDefined) { curated.unpersist(); gated.unpersist() }
-          ()
-        }
+    drain(parquetFiles(spark, docSchema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batchIn, id) =>
+      // 0. optional zeroth stages, exactly as in Curate.run: the
+      // blocklist verdict is a pure function of each doc's own URL
+      // against the fixed broadcast list, and the two text stages
+      // are pure per-row projections — no cross-batch state, so the
+      // stream==batch law extends to all three for free.
+      val batchRaw = blocklist match {
+        case None => batchIn
+        case Some(bl) => batchIn.join(
+          graft.operators.Quality.blocklistFilter(batchIn, bl)
+            .filter(col("kept")).select("doc_id"), "doc_id")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      val batch0 =
+        if (!extractHtml) batchRaw
+        else batchRaw.withColumn("text", TextAnalysis.htmlToText(col("text")))
+      val batch =
+        if (!normalize) batch0
+        else batch0.withColumn("text", TextAnalysis.normalizeText(col("text")))
+      val ss = batch.sparkSession
+      // 1. gate — batch-local narrow decision either way: the rule
+      // gate, or (as in Curate.run) the learned filter's logit > 0
+      // verdict under fixed trained weights, which is a pure
+      // function of each doc's own text and so carries no
+      // cross-batch state to reconcile.
+      val gateKept = gateWeights match {
+        case None => TextAnalysis.qualityGate(batch).filter(col("kept"))
+        case Some(w) => TextAnalysis.scoreQualityLogreg(
+          TextAnalysis.qualityFeatures(batch), w).filter(col("kept"))
+      }
+      val gatedRaw = batch.join(gateKept.select("doc_id"), "doc_id")
+      // With the boilerplate stage on, gated has three consumers —
+      // the strip report's segment pass, the text-restore join side,
+      // and the passage-index sink — so checkpoint it (same file
+      // invariant as Curate's gatedRaw); otherwise the gate's two
+      // text passes re-run for each consumer.
+      val gated =
+        if (boilerplateMaxDocs.isDefined) gatedRaw.localCheckpoint(true)
+        else gatedRaw
+      // 1b. optional boilerplate strip vs the earlier batches' dfs.
+      // Materialized EAGERLY when on: the strip plan reads
+      // passageIndexPath and the index sink below mutates it.
+      val curated = boilerplateMaxDocs match {
+        case None => gated
+        case Some(m) =>
+          val pIdx = earlierBatchPartitions(ss, passageIndexPath, id,
+            "curateIngestStream passage index")
+          val report = pIdx match {
+            case Some(i) => Dedup.stripBoilerplateAgainstIndex(gated, i, m)
+            case None =>
+              // Only the stream's FIRST batch may screen batch-
+              // locally (there are no earlier dfs by definition).
+              // At id > 0 a missing index means the stage was
+              // enabled mid-stream or the path is wrong/cleared —
+              // either way the cross-batch df law cannot hold, and
+              // degrading silently would keep corpus-wide
+              // boilerplate. Fail loudly (repo convention).
+              require(id == 0L,
+                s"curateIngestStream: boilerplate stage is on but " +
+                  s"$passageIndexPath has no batch_id < $id partitions; " +
+                  "the cross-batch passage-df law cannot hold (stage " +
+                  "enabled mid-stream, or wrong/cleared index path). " +
+                  "Restart from a fresh checkpoint with the stage on, " +
+                  "or restore the index.")
+              Dedup.stripBoilerplate(gated, m)
+          }
+          gated.drop("text")
+            .join(report.filter(col("clean_text") =!= "")
+              .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
+            .select(gated.columns.map(col).toIndexedSeq: _*)
+            .localCheckpoint(true)
+      }
+      // 2. dedup on the md5-prefix surrogate id (keep-first-arrived)
+      val relabeled = curated
+        .withColumn("orig_id", col("doc_id"))
+        .withColumn("doc_id",
+          conv(substring(md5(col("orig_id").cast("string")), 1, 15), 16, 10)
+            .cast("long"))
+      val idx = earlierBatchPartitions(ss, indexPath, id, "curateIngestStream index")
+      val survPlan = idx match {
+        case Some(i) => Dedup.dedupAgainstIndexBands(relabeled, i, maxBucket)
+        case None =>
+          val pairs = Dedup.lshCandidates(Dedup.lshBands(Dedup.minhashSignatures(
+            Dedup.shingleHashes(relabeled), hashed = true)), maxBucket)
+          Dedup.survivors(relabeled, pairs)
+      }
+      // Materialize eagerly before any sink mutates a dir the plans
+      // read (index for survivors, stateDir for the budget join).
+      val surv = survPlan.localCheckpoint(true)
+      // 2b. optional span-level decontamination (the Curate.run
+      // stage order: dedup first, then scrub): per-doc pure against
+      // the FIXED held-out frame's shingle set, so batch-local
+      // application IS the batch composition restricted to the
+      // batch — no cross-batch state, the stream==batch law extends
+      // for free. Runs AFTER dedup so the band index below still
+      // represents the text dedup compared; docs emptied by the
+      // scrub drop here and never reach the budget walk.
+      val cleaned = spanDecontaminate match {
+        case None => surv
+        case Some((heldout, nGram)) => surv.drop("text")
+          .join(Dedup.decontaminateSpans(surv, heldout, nGram)
+            .filter(col("clean_text") =!= "")
+            .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
+          .select(surv.columns.map(col).toIndexedSeq: _*)
+          .localCheckpoint(true)
+      }
+      try {
+        // 3. budget — md5 walk within the batch over prior state
+        val prior = earlierBatchPartitions(ss, stateDir, id, "curateIngestStream state")
+          .map(_.groupBy("domain")
+            .agg(max(struct(col("batch_id"), col("cum"))).as("m"))
+            .select(col("domain"), col("m.cum").as("prev")))
+        val w = Window.partitionBy("domain").orderBy("h", "doc_id")
+        val scored = cleaned.select(col(domainCol).as("domain"),
+            col("orig_id").as("doc_id"),
+            size(split(col("text"), " ")).cast("long").as("n_tok"),
+            md5(col("orig_id").cast("string")).as("h"))
+          .withColumn("cum0", sum("n_tok").over(w) - col("n_tok"))
+        val withPrev = prior match {
+          case Some(p) => scored.join(p, Seq("domain"), "left")
+            .withColumn("prev", coalesce(col("prev"), lit(0L)))
+          case None => scored.withColumn("prev", lit(0L))
+        }
+        val accepted = withPrev
+          .filter(col("prev") + col("cum0") < budgetTokens)
+          .select(col("domain"), col("doc_id"), col("n_tok"),
+            (col("prev") + col("cum0") + col("n_tok")).as("cum"))
+          .localCheckpoint(true)
+        try {
+          accepted.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+          accepted.groupBy("domain").agg(max("cum").as("cum"))
+            .coalesce(1)
+            .write.mode("overwrite").parquet(s"$stateDir/batch_id=$id")
+          // the index carries ALL dedup survivors (budget-rejected
+          // docs still suppress future duplicates of themselves)
+          Dedup.lshBands(Dedup.minhashSignatures(
+              Dedup.shingleHashes(surv), hashed = true))
+            .write.mode("overwrite").parquet(s"$indexPath/batch_id=$id")
+          // passage dfs of the batch's GATED (pre-strip) text — the
+          // one-shot law segments every doc's original gated text,
+          // so that is what later batches must count against
+          if (boilerplateMaxDocs.isDefined)
+            Dedup.writePassageIndex(gated, s"$passageIndexPath/batch_id=$id")
+        } finally { accepted.unpersist(); () }
+      } finally {
+        surv.unpersist()
+        if (spanDecontaminate.isDefined) { cleaned.unpersist(); () }
+        if (boilerplateMaxDocs.isDefined) { curated.unpersist(); gated.unpersist() }
+        ()
+      }
+    }
   }
 
   /** Streamed quality report — the reference's daily report DAG
@@ -1396,25 +1344,15 @@ object Ingest {
   def qualityReportStream(spark: SparkSession, customers: DataFrame,
       accounts: DataFrame, txSchema: StructType, srcDir: String,
       goldDir: String, checkpoint: String, now: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(txSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // Per-batch OVERWRITE partition (not a plain append): checkpoint
-        // replay after a crash re-lands the identical row instead of
-        // doubling it.
-        graft.operators.Quality.report(customers, accounts, batch, now)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$goldDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 1): Unit =
+    // Per-batch OVERWRITE partition (not a plain append): checkpoint
+    // replay after a crash re-lands the identical row instead of
+    // doubling it.
+    landEachBatch(spark, txSchema, srcDir, goldDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Quality.report(customers, accounts, batch, now)
+        .coalesce(1)
+    }
 
   /** Streaming vector ingest into a partitioned IVF index: each
     * micro-batch of embeddings is assigned to the index's FIXED
@@ -1444,26 +1382,17 @@ object Ingest {
   def vectorIngestStream(spark: SparkSession, vecSchema: StructType,
       srcDir: String, indexPath: String, centroids: DataFrame,
       checkpoint: String, maxFilesPerTrigger: Int = 1,
-      signalPath: String = "", retrainDist: Double = 0.5): Unit = {
-    val q = spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Ann.writeIvf(batch, centroids,
-          s"$indexPath/batch_id=$id", "overwrite")
-        if (signalPath.nonEmpty)
-          graft.operators.Ann.assignmentDrift(batch, centroids)
-            .withColumn("retrain", col("dist") > retrainDist)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$signalPath/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      signalPath: String = "", retrainDist: Double = 0.5): Unit =
+    drain(parquetFiles(spark, vecSchema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      graft.operators.Ann.writeIvf(batch, centroids,
+        s"$indexPath/batch_id=$id", "overwrite")
+      if (signalPath.nonEmpty)
+        graft.operators.Ann.assignmentDrift(batch, centroids)
+          .withColumn("retrain", col("dist") > retrainDist)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$signalPath/batch_id=$id")
+    }
 
   /** The landed retrain-signal history of a [[vectorIngestStream]] run:
     * (batch_id, c_id, n, dist, retrain), one row per (batch, touched
@@ -1550,32 +1479,25 @@ object Ingest {
       bootstrapPairs: org.apache.spark.sql.Dataset[graft.operators.Multimodal.MediaRow] => DataFrame,
       writeBatch: (org.apache.spark.sql.Dataset[graft.operators.Multimodal.MediaRow], String) => Unit): Unit = {
     import graft.operators.Multimodal
-    val q = spark.readStream.schema(mediaSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val ss = batch.sparkSession
-        import ss.implicits._
-        val media = batch.as[Multimodal.MediaRow]
-        val idx = earlierBatchPartitions(ss, indexPath, id, what)
-        val survivors = idx match {
-          case Some(i) => dedupAgainst(media, i)
-          case None => graft.operators.Dedup.survivors(batch,
-            bootstrapPairs(media))
-        }
-        // survivors read the index the block write mutates: eager
-        // materialization first (the dedupIngestStream rule)
-        val kept = survivors.localCheckpoint(true)
-        try {
-          kept.write.mode("overwrite").parquet(s"$corpusDir/batch_id=$id")
-          writeBatch(kept.as[Multimodal.MediaRow], s"$indexPath/batch_id=$id")
-        } finally { kept.unpersist(); () }
+    drain(parquetFiles(spark, mediaSchema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      val ss = batch.sparkSession
+      import ss.implicits._
+      val media = batch.as[Multimodal.MediaRow]
+      val idx = earlierBatchPartitions(ss, indexPath, id, what)
+      val survivors = idx match {
+        case Some(i) => dedupAgainst(media, i)
+        case None => graft.operators.Dedup.survivors(batch,
+          bootstrapPairs(media))
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      // survivors read the index the block write mutates: eager
+      // materialization first (the dedupIngestStream rule)
+      val kept = survivors.localCheckpoint(true)
+      try {
+        kept.write.mode("overwrite").parquet(s"$corpusDir/batch_id=$id")
+        writeBatch(kept.as[Multimodal.MediaRow], s"$indexPath/batch_id=$id")
+      } finally { kept.unpersist(); () }
+    }
   }
 
   /** Streaming DSIR scoring: each micro-batch of documents is scored
@@ -1593,21 +1515,11 @@ object Ingest {
     * parquet is the natural durable input to it. */
   def dsirScoreStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, outDir: String, model: DataFrame, checkpoint: String,
-      buckets: Int = 4096, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Mix.dsirScoreWith(batch, model, buckets)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      buckets: Int = 4096, maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, docSchema, srcDir, outDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Mix.dsirScoreWith(batch, model, buckets)
+    }
 
   /** Streaming semantic decontamination — arriving train-vector
     * batches scored against a FIXED held-out eval set
@@ -1618,21 +1530,11 @@ object Ingest {
     * batch form row for row and replay re-lands identical files). */
   def semDeconStream(spark: SparkSession, vecSchema: StructType,
       srcDir: String, outDir: String, eval: DataFrame, checkpoint: String,
-      threshold: Double = 0.9, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Ann.semDecontaminate(batch, eval, threshold)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      threshold: Double = 0.9, maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, vecSchema, srcDir, outDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Ann.semDecontaminate(batch, eval, threshold)
+    }
 
   /** Streaming media eval-decontamination — arriving media batches
     * screened against a FROZEN eval fingerprint index
@@ -1650,23 +1552,13 @@ object Ingest {
   def mediaDeconStream(spark: SparkSession, mediaSchema: StructType,
       srcDir: String, outDir: String,
       screen: org.apache.spark.sql.Dataset[graft.operators.Multimodal.MediaRow] => DataFrame,
-      checkpoint: String, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(mediaSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val ss = batch.sparkSession
-        import ss.implicits._
-        screen(batch.as[graft.operators.Multimodal.MediaRow])
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String, maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, mediaSchema, srcDir, outDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      val ss = batch.sparkSession
+      import ss.implicits._
+      screen(batch.as[graft.operators.Multimodal.MediaRow])
+    }
 
   /** Streaming URL-level dedup — the first-stage crawl dedup
     * ([[graft.operators.Quality.urlDedup]]) run incrementally: each
@@ -1681,40 +1573,31 @@ object Ingest {
     * replay re-lands identical files. */
   def urlDedupIngestStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, corpusDir: String, indexPath: String,
-      checkpoint: String, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val ss = batch.sparkSession
-        val inBatch = batch.join(
-          graft.operators.Quality.urlDedup(batch)
-            .filter(col("kept")).select("doc_id"), "doc_id")
-          .withColumn("__nu",
-            graft.operators.Quality.normalizeUrl(col("url")))
-        val idx = earlierBatchPartitions(ss, indexPath, id,
-          "urlDedupIngestStream index")
-        val fresh = idx match {
-          case None => inBatch
-          case Some(i) => inBatch.join(
-            i.select(col("norm_url").as("__nu")), Seq("__nu"), "left_anti")
-        }
-        // Materialize EAGERLY before touching the index the plan reads
-        // (the dedupIngestStream lesson).
-        val kept = fresh.localCheckpoint(true)
-        try {
-          kept.drop("__nu")
-            .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$id")
-          kept.select(col("__nu").as("norm_url")).distinct()
-            .write.mode("overwrite").parquet(s"$indexPath/batch_id=$id")
-        } finally { kept.unpersist(); () }
+      checkpoint: String, maxFilesPerTrigger: Int = 1): Unit =
+    drain(parquetFiles(spark, docSchema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      val inBatch = batch.join(
+        graft.operators.Quality.urlDedup(batch)
+          .filter(col("kept")).select("doc_id"), "doc_id")
+        .withColumn("__nu",
+          graft.operators.Quality.normalizeUrl(col("url")))
+      val idx = earlierBatchPartitions(batch.sparkSession, indexPath, id,
+        "urlDedupIngestStream index")
+      val fresh = idx match {
+        case None => inBatch
+        case Some(i) => inBatch.join(
+          i.select(col("norm_url").as("__nu")), Seq("__nu"), "left_anti")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      // Materialize EAGERLY before touching the index the plan reads
+      // (the dedupIngestStream lesson).
+      val kept = fresh.localCheckpoint(true)
+      try {
+        kept.drop("__nu")
+          .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$id")
+        kept.select(col("__nu").as("norm_url")).distinct()
+          .write.mode("overwrite").parquet(s"$indexPath/batch_id=$id")
+      } finally { kept.unpersist(); () }
+    }
 
   /** Streaming quantile monitor: each micro-batch reduces to its
     * fixed-bounds `Sketch.valueHistogram` (≤ bins rows, additive —
@@ -1726,21 +1609,11 @@ object Ingest {
   def histogramIngestStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, histDir: String, checkpoint: String,
       valueCol: String, lo: Double, hi: Double, bins: Int = 1024,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.functions.Sketch.valueHistogram(batch, valueCol, lo, hi, bins)
-          .write.mode("overwrite").parquet(s"$histDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, docSchema, srcDir, histDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.functions.Sketch.valueHistogram(batch, valueCol, lo, hi, bins)
+    }
 
   /** Grouped sibling of [[histogramIngestStream]]: each micro-batch
     * lands its (group, bin, c) cells
@@ -1755,22 +1628,12 @@ object Ingest {
   def groupedHistogramIngestStream(spark: SparkSession,
       docSchema: StructType, srcDir: String, histDir: String,
       checkpoint: String, groupCol: String, valueCol: String, lo: Double,
-      hi: Double, bins: Int = 256, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.functions.Sketch.valueHistogramBy(batch, groupCol, valueCol,
-            lo, hi, bins)
-          .write.mode("overwrite").parquet(s"$histDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      hi: Double, bins: Int = 256, maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, docSchema, srcDir, histDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.functions.Sketch.valueHistogramBy(batch, groupCol, valueCol,
+          lo, hi, bins)
+    }
 
   /** Streaming covariance monitor: each micro-batch of vectors reduces
     * to its `Ann.covarianceCells` summary (≤ d(d+1)/2 exact-integer
@@ -1785,21 +1648,11 @@ object Ingest {
     * the vector corpus. */
   def covIngestStream(spark: SparkSession, vecSchema: StructType,
       srcDir: String, covDir: String, checkpoint: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Ann.covarianceCells(batch)
-          .write.mode("overwrite").parquet(s"$covDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, vecSchema, srcDir, covDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Ann.covarianceCells(batch)
+    }
 
   /** Grouped sibling of [[covIngestStream]]: per-batch
     * `Ann.covarianceCellsBy` summaries (≤ groups × d(d+1)/2 rows),
@@ -1808,21 +1661,11 @@ object Ingest {
     * embedding statistics refresh without re-reading vectors. */
   def covByIngestStream(spark: SparkSession, vecSchema: StructType,
       srcDir: String, covDir: String, checkpoint: String,
-      groupCol: String, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Ann.covarianceCellsBy(batch, groupCol)
-          .write.mode("overwrite").parquet(s"$covDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      groupCol: String, maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, vecSchema, srcDir, covDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Ann.covarianceCellsBy(batch, groupCol)
+    }
 
   /** Streaming corpus-health feed: each micro-batch lands its
     * `TextAnalysis.tokenCountSummary` (tok, c) rows as a per-batch-id
@@ -1834,21 +1677,11 @@ object Ingest {
     * `zipfFit` bit for bit (SCZIPF law). */
   def tokenCountsIngestStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, countsDir: String, checkpoint: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.functions.TextAnalysis.tokenCountSummary(batch)
-          .write.mode("overwrite").parquet(s"$countsDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, docSchema, srcDir, countsDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.functions.TextAnalysis.tokenCountSummary(batch)
+    }
 
   /** Streaming drift monitor: each micro-batch of documents reduces to
     * its `Quality.driftCounts` bucket summary (≤ buckets rows — the
@@ -1862,21 +1695,11 @@ object Ingest {
     * — streamed == one-shot `corpusDrift` bit for bit (spec law). */
   def driftCountsStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, countsDir: String, checkpoint: String,
-      buckets: Int = 1024, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Quality.driftCounts(batch, buckets)
-          .write.mode("overwrite").parquet(s"$countsDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      buckets: Int = 1024, maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, docSchema, srcDir, countsDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Quality.driftCounts(batch, buckets)
+    }
 
   /** Grouped sibling of [[driftCountsStream]] (the
     * [[groupedHistogramIngestStream]] relationship, on the text side):
@@ -1892,21 +1715,11 @@ object Ingest {
   def driftCountsByStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, countsDir: String, checkpoint: String,
       groupCol: String, buckets: Int = 1024,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Quality.driftCountsBy(batch, groupCol, buckets)
-          .write.mode("overwrite").parquet(s"$countsDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, docSchema, srcDir, countsDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Quality.driftCountsBy(batch, groupCol, buckets)
+    }
 
   /** Streaming BM25 ingest: each micro-batch of documents is indexed
     * alone (postings/doclens/stats are all ADDITIVE over disjoint doc
@@ -1921,21 +1734,12 @@ object Ingest {
     * surfaces batch_id as a column the scoring chain never reads. */
   def bm25IngestStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, indexPath: String, checkpoint: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.functions.TextAnalysis.writeBm25(batch, indexPath, "overwrite",
-          "doc_id", "text", sub = s"batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 1): Unit =
+    drain(parquetFiles(spark, docSchema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      graft.functions.TextAnalysis.writeBm25(batch, indexPath, "overwrite",
+        "doc_id", "text", sub = s"batch_id=$id")
+    }
 
   /** Streaming n-gram count-min-sketch ingest: each micro-batch is
     * summarized ALONE into one depth×width sketch row (a few hundred
@@ -1950,21 +1754,11 @@ object Ingest {
     * one-shot batch construction no matter how ingest was batched. */
   def sketchIngestStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, outDir: String, checkpoint: String, n: Int = 3,
-      depth: Int = 4, width: Int = 8192, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.functions.Sketch.ngramCms(batch, n, depth, width)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      depth: Int = 4, width: Int = 8192, maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, docSchema, srcDir, outDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.functions.Sketch.ngramCms(batch, n, depth, width)
+    }
 
   /** Streaming Misra-Gries heavy-hitter summary ingest: each
     * micro-batch lands its 1-row (mg, n, budget) token summary
@@ -1978,21 +1772,11 @@ object Ingest {
     * [[sketchIngestStream]]'s CMS artifact. */
   def mgIngestStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, outDir: String, checkpoint: String,
-      budget: Int = 4096, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.functions.Sketch.mgSummary(batch, budget)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      budget: Int = 4096, maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, docSchema, srcDir, outDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.functions.Sketch.mgSummary(batch, budget)
+    }
 
   /** Streaming HLL register ingest: each micro-batch lands its
     * ≤ 2^p-row (idx, r) register table
@@ -2007,26 +1791,15 @@ object Ingest {
     * [[sketchIngestStream]]'s CMS artifact. */
   def hllIngestStream(spark: SparkSession, docSchema: StructType,
       srcDir: String, outDir: String, checkpoint: String, p: Int = 10,
-      textCol: String = "text", maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        import org.apache.spark.sql.functions._
-        val toks = batch
-          .select(explode(split(coalesce(col(textCol), lit("")), " "))
-            .as("token"))
-          .filter(col("token") =!= "")
-        graft.functions.Sketch.hllRegisters(toks, "token", p)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      textCol: String = "text", maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, docSchema, srcDir, outDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      val toks = batch
+        .select(explode(split(coalesce(col(textCol), lit("")), " "))
+          .as("token"))
+        .filter(col("token") =!= "")
+      graft.functions.Sketch.hllRegisters(toks, "token", p)
+    }
 
   /** Streaming incremental entity resolution: each micro-batch of
     * records resolves against the entities accumulated from EARLIER
@@ -2062,21 +1835,13 @@ object Ingest {
       idCol: String, blkCol: String, matchCol: String,
       maxDist: Int = 1, maxBlock: Int = 1000, maxIter: Int = 20,
       maxFilesPerTrigger: Int = 1,
-      maxRemapRows: Long = 1000000L, blkBuckets: Int = 64): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Quality.erStreamStep(batch, id, indexPath,
-          idCol, blkCol, matchCol, maxDist, maxBlock, maxIter,
-          maxRemapRows, blkBuckets)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxRemapRows: Long = 1000000L, blkBuckets: Int = 64): Unit =
+    drain(parquetFiles(spark, schema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      graft.operators.Quality.erStreamStep(batch, id, indexPath,
+        idCol, blkCol, matchCol, maxDist, maxBlock, maxIter,
+        maxRemapRows, blkBuckets)
+    }
 
   /** Streaming anomaly screen: each micro-batch is scored against a
     * FROZEN per-group robust (med, mad) model
@@ -2094,23 +1859,13 @@ object Ingest {
   def outlierIngestStream(spark: SparkSession, schema: StructType,
       srcDir: String, outDir: String, checkpoint: String,
       model: DataFrame, groupCol: String, valueCol: String,
-      cutoff: Double = 3.5, maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Quality
-          .scoreOutliers(batch, model, groupCol, valueCol, cutoff)
-          .filter(col("outlier"))
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      cutoff: Double = 3.5, maxFilesPerTrigger: Int = 1): Unit =
+    landEachBatch(spark, schema, srcDir, outDir, checkpoint,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Quality
+        .scoreOutliers(batch, model, groupCol, valueCol, cutoff)
+        .filter(col("outlier"))
+    }
 
   /** Streaming PQ-code ingest: each micro-batch of embeddings is
     * encoded against the index's FIXED codebooks (broadcast narrow
@@ -2129,27 +1884,18 @@ object Ingest {
   def pqIngestStream(spark: SparkSession, vecSchema: StructType,
       srcDir: String, indexPath: String, books: DataFrame,
       checkpoint: String, coarse: Option[DataFrame] = None, m: Int = 8,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        coarse match {
-          case None =>
-            graft.operators.Ann.writePq(batch, books,
-              s"$indexPath/batch_id=$id", m, "overwrite")
-          case Some(c) =>
-            graft.operators.Ann.writeIvfPq(batch, c, books,
-              s"$indexPath/batch_id=$id", m, "overwrite")
-        }
-        ()
+      maxFilesPerTrigger: Int = 1): Unit =
+    drain(parquetFiles(spark, vecSchema, srcDir, maxFilesPerTrigger),
+        checkpoint) { (batch, id) =>
+      coarse match {
+        case None =>
+          graft.operators.Ann.writePq(batch, books,
+            s"$indexPath/batch_id=$id", m, "overwrite")
+        case Some(c) =>
+          graft.operators.Ann.writeIvfPq(batch, c, books,
+            s"$indexPath/batch_id=$id", m, "overwrite")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** T4/T5: bounded-state streaming dedup — duplicates dropped while
     * their event time is within the watermark, after which state is
@@ -2177,14 +1923,14 @@ object Ingest {
       budgetTokens: Long, domainCol: String = "lang",
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     // The id rides through the typed state machine as a STRING and is
     // cast back to its native type on the way out: a long/int id
     // round-trips exactly, and a non-numeric id (UUIDs etc.) survives
     // where a blind cast-to-long would null it (batch
     // tokenBudgetSample keeps the native type throughout).
     val idType = docSchema(idCol).dataType
-    val docs = spark.readStream.schema(docSchema).parquet(srcDir)
+    val docs = parquetFiles(spark, docSchema, srcDir, 0)
       .select(col(domainCol).as("domain"), col(idCol).cast("string").as("doc_id"),
         size(split(col(textCol), " ")).cast("long").as("n_tok"),
         md5(col(idCol).cast("string")).as("h"))
@@ -2203,14 +1949,11 @@ object Ingest {
       }
       .toDF("domain", "doc_id", "n_tok", "cum")
       .withColumn("doc_id", col("doc_id").cast(idType))
-    val q = accepted.writeStream
+    awaitDrained(accepted.writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode("append"))
   }
 
   /** ST4: validation routing — future-dated events (reference injects

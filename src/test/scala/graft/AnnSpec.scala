@@ -92,7 +92,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("IVF write path prunes cluster directories and nprobe widens recall") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString
+    val dir = tmp("ivf")
     val d = emb(
       (0L, Seq(1f, 0f)), (1L, Seq(0f, 1f)),
       (2L, Seq(0.99f, 0.01f)), (3L, Seq(0.98f, 0.02f)),
@@ -111,8 +111,8 @@ class AnnSpec extends SparkSpec {
   }
 
   test("appendIvfIndex: incremental batches equal a full rewrite, old files untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfa").toString
-    val full = java.nio.file.Files.createTempDirectory("ivff").toString
+    val dir = tmp("ivfa")
+    val full = tmp("ivff")
     val d = emb(
       (0L, Seq(1f, 0f)), (1L, Seq(0f, 1f)),
       (2L, Seq(0.99f, 0.01f)), (3L, Seq(0.98f, 0.02f)),
@@ -140,7 +140,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("batched IVF: one plan serves the query batch; index path still prunes partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfb").toString
+    val dir = tmp("ivfb")
     val d = emb(
       (0L, Seq(1f, 0f)), (1L, Seq(0f, 1f)),
       (2L, Seq(0.99f, 0.01f)), (3L, Seq(0.98f, 0.02f)),
@@ -453,8 +453,8 @@ class AnnSpec extends SparkSpec {
       .filter(col("vec_id") < 150)
     val queries = embSf.filter(col("vec_id") < 3)
     val books = Ann.pqTrain(embSf, m = 4, ksub = 8, iters = 1).localCheckpoint(true)
-    val dir = java.nio.file.Files.createTempDirectory("pqi").toString
-    val full = java.nio.file.Files.createTempDirectory("pqf").toString
+    val dir = tmp("pqi")
+    val full = tmp("pqf")
     Ann.writePqIndex(embSf.filter(col("vec_id") < 100), books, dir, m = 4)
     val before = partFiles(dir)
     Ann.appendPqIndex(embSf.filter(col("vec_id") >= 100), books, dir, m = 4)
@@ -477,7 +477,7 @@ class AnnSpec extends SparkSpec {
     assert(viaIdx == inMem)
     // codebooks survive a parquet round-trip bit-for-bit: searching
     // with re-read books is row-identical
-    val bdir = java.nio.file.Files.createTempDirectory("pqb").toString + "/books"
+    val bdir = tmp("pqb") + "/books"
     books.write.parquet(bdir)
     val viaRead = Ann.pqSearchIndex(spark, dir, spark.read.parquet(bdir),
       embSf, queries, k = 5, m = 4, shortlist = 20)
@@ -495,8 +495,8 @@ class AnnSpec extends SparkSpec {
     val books = Ann.pqTrain(
       Ann.ivfPqResiduals(embSf, coarse).drop("c_id"),
       m = 4, ksub = 8, iters = 1).localCheckpoint(true)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpqi").toString
-    val full = java.nio.file.Files.createTempDirectory("ivfpqf").toString
+    val dir = tmp("ivfpqi")
+    val full = tmp("ivfpqf")
     Ann.writeIvfPqIndex(embSf.filter(col("vec_id") < 100), coarse, books, dir, m = 4)
     val before = partFiles(dir)
     Ann.appendIvfPqIndex(embSf.filter(col("vec_id") >= 100), coarse, books, dir, m = 4)

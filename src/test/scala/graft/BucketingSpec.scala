@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -11,7 +10,7 @@ import graft.sources.Tables
 class BucketingSpec extends SparkSpec {
 
   test("bucketed fact-fact join plans without a shuffle exchange") {
-    val wh = Files.createTempDirectory("bucketed-wh").toString
+    val wh = tmp("bucketed-wh")
     val o = Tables.load(spark, sf, "orders")
     val l = Tables.load(spark, sf, "lineitem")
     o.write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")

@@ -234,7 +234,7 @@ class DedupSpec extends SparkSpec {
 
   test("incremental dedup vs persisted band index equals full recompute; old text never rescanned") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val root = tmp("lshidx")
     val oldPath = s"$root/old_corpus.parquet"; val idxPath = s"$root/bands"
     val t1 = "alpha beta gamma delta epsilon zeta eta theta"
     val t2 = "one two three four five six seven eight nine"
@@ -363,7 +363,7 @@ class DedupSpec extends SparkSpec {
       (10L, "lead in " + boiler + " trailing"),
       (11L, "own dup segment " + (1 to 40).map(i => s"z$i").mkString(" ")),
       (12L, "other prefix own dup segment " + (1 to 40).map(i => s"z$i").mkString(" ")))
-    val dir = java.nio.file.Files.createTempDirectory("cdcidx").toString + "/idx"
+    val dir = tmp("cdcidx") + "/idx"
     Dedup.writeChunkIndex(batch1, dir)
     val incr = Dedup.cdcDedupAgainstIndex(batch2,
         spark.read.parquet(dir))
@@ -542,7 +542,7 @@ class DedupSpec extends SparkSpec {
     // appears once more (crosses maxDocs=2 only with the index's df
     // counted in), "c d" is new-batch-only boilerplate across two new
     // docs at maxDocs=1, "x y" unique.
-    val dir = java.nio.file.Files.createTempDirectory("passage-idx").toString
+    val dir = tmp("passage-idx")
     val old = docs((1L, "a b q q"), (2L, "a b r r"), (3L, "s s t t"))
     val batch = docs((10L, "a b x y"), (11L, "c d u u"), (12L, "c d v v"))
     for (maxDocs <- Seq(1, 2)) {

@@ -17,10 +17,10 @@ class JdbcSpec extends SparkSpec {
 
   // keep Derby's log out of the repo cwd
   System.setProperty("derby.stream.error.file",
-    java.nio.file.Files.createTempDirectory("derbylog").resolve("derby.log").toString)
+    tmp("derbylog") + "/derby.log")
 
   private def derbyUrl(name: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("derby").toString
+    val dir = tmp("derby")
     s"jdbc:derby:$dir/$name;create=true"
   }
 

@@ -7,7 +7,7 @@ import graft.sources.{Lake, Tables}
 class LakeSpec extends SparkSpec {
 
   test("S7/S2: bronze batches land under batch_ts partitions and prune on read") {
-    val root = Files.createTempDirectory("bronze").toString
+    val root = tmp("bronze")
     val ev = Tables.load(spark, sf, "events")
     Lake.writeBronze(ev.filter(col("event_id") < 500), root, "events", "2024-01-01T00")
     Lake.writeBronze(ev.filter(col("event_id") >= 500), root, "events", "2024-01-01T01")
@@ -21,7 +21,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("vacuumBronze drops expired batch partitions; survivors read back intact") {
-    val root = Files.createTempDirectory("vac").toString
+    val root = tmp("vac")
     val ev = Tables.load(spark, sf, "events")
     Lake.writeBronze(ev.filter(col("event_id") < 300), root, "events", "2024-01-01T00")
     Lake.writeBronze(ev.filter(col("event_id") >= 300 && col("event_id") < 600),
@@ -41,7 +41,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("asOfBatch time-travel reads the table as of an ingest batch; composes with sinceBatch") {
-    val root = Files.createTempDirectory("tt").toString
+    val root = tmp("tt")
     val ev = Tables.load(spark, sf, "events")
     Lake.writeBronze(ev.filter(col("event_id") < 300), root, "events", "2024-01-01T00")
     Lake.writeBronze(ev.filter(col("event_id") >= 300 && col("event_id") < 600),
@@ -58,7 +58,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("fileStats reports per-file rows and min/max for skipping audits") {
-    val dir = Files.createTempDirectory("fs").toString + "/t"
+    val dir = tmp("fs") + "/t"
     val nation = Tables.load(spark, sf, "nation")
     Lake.writeClustered(nation, dir, nFiles = 4, col("n_nationkey"))
     val st = Lake.fileStats(spark, dir, Seq("n_nationkey")).collect()
@@ -76,7 +76,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("clustered write produces disjoint per-file key ranges (file-skipping layout)") {
-    val out = Files.createTempDirectory("clustered").toString
+    val out = tmp("clustered")
     val events = Tables.load(spark, sf, "events")
     Lake.writeClustered(events, out, nFiles = 8, col("ts"))
     // re-derive each file's [min, max] of the clustering key
@@ -95,8 +95,8 @@ class LakeSpec extends SparkSpec {
   }
 
   test("z-ordered write skips files on BOTH dimensions; single-dim clustering cannot") {
-    val zdir = Files.createTempDirectory("zorder").toString + "/z"
-    val cdir = Files.createTempDirectory("zorder").toString + "/c"
+    val zdir = tmp("zorder") + "/z"
+    val cdir = tmp("zorder") + "/c"
     val events = Tables.load(spark, sf, "events")
     Lake.writeZOrdered(events, zdir, nFiles = 8, col("user_id"), col("value"))
     Lake.writeClustered(events, cdir, nFiles = 8, col("user_id"))
@@ -122,7 +122,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("compact bin-packs many small files into few, content identical") {
-    val dir = Files.createTempDirectory("compact").toString + "/t"
+    val dir = tmp("compact") + "/t"
     val events = Tables.load(spark, sf, "events")
     events.repartition(20).write.parquet(dir)
     def dataFiles() = new java.io.File(dir).listFiles()
@@ -136,7 +136,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("S7 CSV compatibility mode round-trips") {
-    val root = Files.createTempDirectory("bronze-csv").toString
+    val root = tmp("bronze-csv")
     val nation = Tables.load(spark, sf, "nation")
     Lake.writeBronze(nation, root, "nation", "b1", format = "csv")
     val back = Lake.readBronze(spark, root, "nation", format = "csv")
@@ -144,7 +144,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("S10/S11/S3/S4: DDL create-drop-recreate + catalog introspection") {
-    val loc = Files.createTempDirectory("tbl").toString
+    val loc = tmp("tbl")
     val schema = Tables.load(spark, sf, "region").schema
     Lake.recreateTable(spark, "graft_region", schema, Some(loc))
     assert(spark.catalog.tableExists("graft_region"))
@@ -155,7 +155,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("JSONL round-trip: sharded gz write, schema-first read, values intact") {
-    val dir = Files.createTempDirectory("jsonl").toString + "/docs"
+    val dir = tmp("jsonl") + "/docs"
     val docs = Tables.load(spark, sf, "documents")
       .select("doc_id", "text", "lang", "source")
     Lake.writeJsonl(docs, dir, numShards = 4)
@@ -175,7 +175,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("JSONL corrupt lines quarantine intact instead of dropping or failing") {
-    val dir = Files.createTempDirectory("jsonlc")
+    val dir = java.nio.file.Paths.get(tmp("jsonlc"))
     Files.writeString(dir.resolve("part-0.jsonl"),
       """{"doc_id": 1, "text": "ok"}
         |this line is not json

@@ -347,7 +347,7 @@ class MultimodalSpec extends SparkSpec {
     def m(id: Long, tex: Long) = MediaRow(id, pHashImageFixture(tex), "image", 32, 32, 0L)
     // indexed corpus: five distinct textures (fixture evens)
     val old = Seq(m(0, 0), m(2, 2), m(4, 4), m(6, 6), m(8, 8)).toDS()
-    val idxDir = java.nio.file.Files.createTempDirectory("phidx").toString + "/idx"
+    val idxDir = tmp("phidx") + "/idx"
     Multimodal.writePHashIndex(old, idxDir)
     // new batch (ids above all indexed ids — the equality precondition):
     //  100: brightness-shifted copy of texture 0  -> old match, drops
@@ -375,7 +375,7 @@ class MultimodalSpec extends SparkSpec {
     import Multimodal.{MediaRow, spectralAudioFixture}
     def m(id: Long, tex: Long) = MediaRow(id, spectralAudioFixture(tex), "audio", 0, 0, 0L)
     val old = Seq(m(0, 0), m(2, 2), m(4, 4)).toDS()
-    val idxDir = java.nio.file.Files.createTempDirectory("spidx").toString + "/idx"
+    val idxDir = tmp("spidx") + "/idx"
     Multimodal.writeSpectralIndex(old, idxDir)
     // 100: x2-gain copy of indexed texture 0 -> drops; 101/102: fresh
     // within-batch gain-dup pair -> keep min; 103: fresh -> kept
@@ -396,7 +396,7 @@ class MultimodalSpec extends SparkSpec {
     def m(id: Long, tex: Long) = MediaRow(id, videoFixture(tex), "video", 32, 32, 0L)
     // indexed corpus: three distinct 6-frame videos (fixture evens)
     val old = Seq(m(0, 0), m(2, 2), m(4, 4)).toDS()
-    val idxDir = java.nio.file.Files.createTempDirectory("vfidx").toString + "/idx"
+    val idxDir = tmp("vfidx") + "/idx"
     Multimodal.writeFrameIndex(old, idxDir)
     // new batch (ids above all indexed ids — the equality precondition):
     //  100: trimmed + graded copy of indexed texture 0 (shares 5
@@ -457,7 +457,7 @@ class MultimodalSpec extends SparkSpec {
     // index-variant law: screening against a PERSISTED eval
     // fingerprint index == screening against the eval payloads, per
     // modality (eval hashed once at index-build time)
-    val evIdx = java.nio.file.Files.createTempDirectory("evidx").toString
+    val evIdx = tmp("evidx")
     Multimodal.writePHashIndex(evalImg, s"$evIdx/img")
     Multimodal.writeSpectralIndex(Seq(aud(0, 0)).toDS(), s"$evIdx/aud")
     Multimodal.writeFrameIndex(evalVid, s"$evIdx/vid")
@@ -521,7 +521,7 @@ class MultimodalSpec extends SparkSpec {
       MediaRow(6L, Multimodal.videoFixture(0), "video", 32, 32, 0L),
       MediaRow(7L, Multimodal.videoFixture(1), "video", 32, 32, 0L),       // trimmed dup of 6
       MediaRow(8L, "just text".getBytes, "text", 0, 0, 0L)).toDS()         // no codec: passes
-    val idxRoot = java.nio.file.Files.createTempDirectory("cmidx").toString
+    val idxRoot = tmp("cmidx")
     val (out, st) = CurateMedia.run(corpus, maxDist = 0,
       indexRoot = Some(idxRoot))
     val kept = out.select("doc_id").as[Long].collect().toSet
@@ -564,7 +564,7 @@ class MultimodalSpec extends SparkSpec {
     val evalSet = Seq(
       MediaRow(900L, Multimodal.pHashImageFixture(1), "image", 32, 32, 0L),
       MediaRow(901L, Multimodal.videoFixture(1), "video", 32, 32, 0L)).toDS()
-    val idxRoot2 = java.nio.file.Files.createTempDirectory("cmidx2").toString
+    val idxRoot2 = tmp("cmidx2")
     val (out4, st4) = CurateMedia.run(corpus, maxDist = 0,
       indexRoot = Some(idxRoot2), evalMedia = Some(evalSet))
     assert(out4.select("doc_id").as[Long].collect().toSet == Set(4L, 8L))

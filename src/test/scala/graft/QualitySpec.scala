@@ -280,7 +280,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("incremental ER disk index: append-only committed steps, snapshot == full recompute") {
-    val path = java.nio.file.Files.createTempDirectory("er-index").toString
+    val path = tmp("er-index")
     def rows(ids: Seq[Long]) = ids.map(i => (i, "blk1", "p" + "x" * i.toInt))
     val b1 = rows(Seq(1L, 2L, 5L, 6L)).toDF("pid", "blk", "nm")
     val b2 = rows(Seq(3L, 4L)).toDF("pid", "blk", "nm")
@@ -316,7 +316,7 @@ class QualitySpec extends SparkSpec {
     // bucketed: every rows step dir is blkb=-partitioned, pinned by
     // the meta marker, so an incremental step's prior read prunes to
     // the batch's touched buckets at the file level
-    val path = java.nio.file.Files.createTempDirectory("er-blkb").toString
+    val path = tmp("er-blkb")
     val b1 = (1L to 40L).map(i => (i, s"blk${i % 7}", "p" + "x" * (i % 5).toInt))
       .toDF("pid", "blk", "nm")
     val b2 = Seq((100L, "blk1", "p"), (101L, "blk2", "px"))
@@ -341,7 +341,7 @@ class QualitySpec extends SparkSpec {
     assert(snap == full)
     // legacy: a pre-r11 committed-step index (flat rows, no meta
     // marker) keeps reading AND appending FLAT — layouts never mix
-    val leg = java.nio.file.Files.createTempDirectory("er-legacy").toString
+    val leg = tmp("er-legacy")
     Quality.normalizeErBatch(b1, col("pid"), col("blk"), col("nm"))
       .withColumn("comp", col("id"))
       .write.mode("overwrite").parquet(s"$leg/rows/step=0")
@@ -357,7 +357,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("ER index compaction: snapshot unchanged, remap folded away, superseded steps dropped") {
-    val path = java.nio.file.Files.createTempDirectory("er-compact").toString
+    val path = tmp("er-compact")
     def rows(ids: Seq[Long]) = ids.map(i => (i, "blk1", "p" + "x" * i.toInt))
     val b1 = rows(Seq(1L, 2L, 5L, 6L)).toDF("pid", "blk", "nm")
     val b2 = rows(Seq(3L, 4L)).toDF("pid", "blk", "nm")
@@ -395,7 +395,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("ER index atomicity: an uncommitted step is invisible; the retry overwrites, never duplicates") {
-    val path = java.nio.file.Files.createTempDirectory("er-atomic").toString
+    val path = tmp("er-atomic")
     def rows(ids: Seq[Long]) = ids.map(i => (i, "blk1", "p" + "x" * i.toInt))
     val b1 = rows(Seq(1L, 2L)).toDF("pid", "blk", "nm")
     val b2 = rows(Seq(3L, 4L)).toDF("pid", "blk", "nm")

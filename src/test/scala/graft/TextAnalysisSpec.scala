@@ -480,7 +480,7 @@ class TextAnalysisSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("q_id", "doc_id", "score", "rn").collect().map(_.toSeq).toSet
 
-    val root = Files.createTempDirectory("bm25idx").toString
+    val root = tmp("bm25idx")
     TextAnalysis.writeBm25Index(corpus, root)
     val free = rows(TextAnalysis.bm25TopK(corpus, queries, k = 5))
     val idx = TextAnalysis.bm25SearchIndex(spark, root, queries, k = 5)
@@ -493,7 +493,7 @@ class TextAnalysisSpec extends SparkSpec {
       plan.linesIterator.take(40).mkString("\n"))
 
     // incremental: batch1 + append(batch2) == one-shot full index
-    val root2 = Files.createTempDirectory("bm25idx2").toString
+    val root2 = tmp("bm25idx2")
     TextAnalysis.writeBm25Index(corpus.filter($"doc_id" <= 20), root2)
     def snapshot(): Map[String, Long] = {
       val d = Paths.get(root2, "postings")

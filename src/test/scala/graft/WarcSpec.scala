@@ -35,7 +35,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("readWarc parses records from plain and member-gzipped shards") {
-    val dir = Files.createTempDirectory("warc")
+    val dir = java.nio.file.Paths.get(tmp("warc"))
     Files.write(dir.resolve("a.warc"), fixtureBytes)
     val gz = new java.io.ByteArrayOutputStream()
     val go = new GZIPOutputStream(gz)
@@ -54,7 +54,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("httpBodyText strips HTTP headers; composes with htmlToText end to end") {
-    val dir = Files.createTempDirectory("warc2")
+    val dir = java.nio.file.Paths.get(tmp("warc2"))
     Files.write(dir.resolve("a.warc"), fixtureBytes)
     val pages = Warc.readWarc(spark, dir.toString)
       .filter(col("record_type") === "response")
