@@ -757,12 +757,7 @@ object TextAnalysis {
     val uni = toks.select(explode(col("t")).as("token"))
       .groupBy("token").agg(count(lit(1)).cast("long").as("cnt"))
     val total = uni.agg(sum("cnt").cast("long").as("total"))
-    val tf = toks.filter(size(col("t")) >= 2)
-      .selectExpr("doc_id",
-        "explode(transform(sequence(1, size(t) - 1), " +
-          "i -> named_struct('w1', element_at(t, i), 'w2', element_at(t, i + 1)))) AS b")
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).cast("long").as("tf"))
+    val tf = bigramTf(toks)
     val bc = tf.groupBy("w1", "w2").agg(sum("tf").cast("long").as("bc"))
     val cc = bc.groupBy("w1").agg(sum("bc").cast("long").as("cc"))
     tf.join(bc, Seq("w1", "w2"))
@@ -779,6 +774,23 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_bi"),
         round(col("s") / col("n_bi"), 6).as("score"))
   }
+
+  /** Per-doc bigram term frequencies (doc_id, w1, w2, tf) over a
+    * (doc_id, t = split tokens) frame — the one bigram table of
+    * [[bigramScore]] and [[bigramScoreKN]]. The non-null filter drops
+    * nothing (split yields no null token and every index is in range),
+    * but stating it here gives every consumer the same subtree: the
+    * (w1, w2), w1 and w2 joins downstream would otherwise infer
+    * different null filters into different copies, and ReuseExchange
+    * could not collapse them. */
+  private def bigramTf(toks: DataFrame): DataFrame =
+    toks.filter(size(col("t")) >= 2)
+      .selectExpr("doc_id",
+        "explode(transform(sequence(1, size(t) - 1), " +
+          "i -> named_struct('w1', element_at(t, i), 'w2', element_at(t, i + 1)))) AS b")
+      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+      .filter(col("w1").isNotNull && col("w2").isNotNull)
+      .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).cast("long").as("tf"))
 
   /** Interpolated Kneser-Ney bigram LM score — the sharper sibling of
     * [[bigramScore]] at the low-count tail a dedup'd corpus is full
@@ -804,12 +816,7 @@ object TextAnalysis {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(discount > 0 && discount < 1, "discount must be in (0, 1)")
     val toks = docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("t"))
-    val tf = toks.filter(size(col("t")) >= 2)
-      .selectExpr("doc_id",
-        "explode(transform(sequence(1, size(t) - 1), " +
-          "i -> named_struct('w1', element_at(t, i), 'w2', element_at(t, i + 1)))) AS b")
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).cast("long").as("tf"))
+    val tf = bigramTf(toks)
     val bc = tf.groupBy("w1", "w2").agg(sum("tf").cast("long").as("bc"))
     // context totals AND distinct-continuation counts in one pass
     val cc = bc.groupBy("w1").agg(sum("bc").cast("long").as("cc"),
@@ -1001,17 +1008,22 @@ object TextAnalysis {
   private def bm25TermsFor(tf: DataFrame, dl: DataFrame, st: DataFrame,
       qset: DataFrame, k1: Double, b: Double,
       carry: Seq[String] = Nil): DataFrame = {
-    val idf = tf.groupBy("token").agg(count(lit(1)).cast("long").as("df"))
-      .crossJoin(broadcast(st))
-      .select(col("token"), round(log(
-        (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)), 6)
-        .as("idf"))
+    // Every consumer reads the value columns of `tf` and `st`, so the
+    // plan holds ONE postings aggregate and one stats aggregate for
+    // ReuseExchange to share. A plain count(1) per token (or count(tf),
+    // which the optimizer rewrites to it) would prune `tf` to a
+    // keys-only copy; joining an n-only idf table would prune `st` and
+    // `dl` the same way. Hence df counts postings with tf > 0 (all of
+    // them) and idf is computed past the one stats crossJoin.
+    val df = tf.groupBy("token").agg(count_if(col("tf") > 0).as("df"))
+    val idf = round(log(
+      (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)), 6)
     val avgdl = col("tot").cast("double") / col("n")
-    val term = round(col("idf") * (col("tf") * lit(k1 + 1)) /
+    val term = round(idf * (col("tf") * lit(k1 + 1)) /
       (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / avgdl))), 6)
     tf.join(broadcast(qset), "token")
       .filter(col("doc_id") =!= col("q_id"))
-      .join(idf, "token")
+      .join(df, "token")
       .join(dl, "doc_id")
       .crossJoin(broadcast(st))
       .select(Seq(col("q_id"), col("doc_id"), term.as("term")) ++
@@ -1108,9 +1120,10 @@ object TextAnalysis {
     *
     * The plan stays fully LAZY on purpose: it references the postings
     * relation from six subtrees (base leg, feedback model, expansion
-    * leg, plus their idf/dl/stat joins — 34 nominal scans at sf0.01),
-    * but the exchanges are textually identical, so AQE's ReuseExchange
-    * serves them from one execution. A scoped persist of postings +
+    * leg, plus their df/dl/stat joins), but the exchanges are textually
+    * identical (every consumer reads the same columns, see
+    * [[bm25TermsFor]]), so AQE's ReuseExchange serves them from one
+    * execution. A scoped persist of postings +
     * doclens (the p02 alternative shape) was measured ~2x SLOWER at
     * sf0.1 (3.06 s lazy vs 5.6-7.4 s persisted, interleaved same-load
     * A/B): the cache materialization + InMemoryTableScan overhead

@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 /** Adaptive fan-out for CPU-heavy narrow maps.
@@ -29,35 +32,32 @@ import org.apache.spark.sql.functions.col
   * — without it AQE would see 594 KB and fold the exchange back to
   * one partition, silently undoing the fan-out.
   *
-  * Only SHUFFLE-FREE plans are candidates: a frame downstream of any
-  * Exchange already runs at shuffle/broadcast-stage parallelism, and —
-  * the sharper reason — probing `.rdd` on an exchange-bearing plan
-  * under AQE MATERIALIZES the exchange's query stages (adaptive
-  * execution runs shuffle jobs eagerly to re-plan), so the "check"
-  * would silently execute half the query at operator-construction
-  * time. On an exchange-free narrow plan `.rdd` is pure planning.
+  * Only EXCHANGE-FREE plans are candidates: a frame whose prepared
+  * physical plan holds any Exchange (a join's or aggregate's shuffle,
+  * a broadcast, an explicit repartition) or a subquery is returned
+  * unchanged. The guard reads the prepared plan (for an adaptive plan,
+  * its initial plan, which already holds the exchanges
+  * EnsureRequirements inserts) and never executes it: asking an
+  * adaptive plan for `.rdd` would run its query stages (adaptive
+  * execution materializes them to re-plan), so the "check" would
+  * execute half the query at operator-construction time, and on any
+  * plan `.rdd` runs the subqueries. Past a shuffle the frame no longer
+  * runs at the scan's parallelism anyway. On an exchange- and
+  * subquery-free narrow plan `.rdd` is pure planning.
   *
   * Streaming frames pass through untouched (their parallelism is the
   * source's; `.rdd` is undefined on them), as do frames already wide
   * enough. */
 object Fanout {
 
-  /** Whether `df`'s (pre-adaptive) physical plan carries an Exchange —
-    * i.e. whether multiple consumers of `df` inside ONE action can be
-    * served from a single execution via ReuseExchange. Callers use
-    * this to pick between a lazy multi-reference plan (sharing point
-    * exists — e.g. this object's own repartition fired) and an
-    * explicit persist (wide narrow-from-scan plan: each reference
-    * would re-run the whole subtree). Pure planning — never executes. */
-  def hasExchange(df: DataFrame): Boolean =
-    !df.isStreaming && df.queryExecution.sparkPlan.find(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]).isDefined
-
   def apply(df: DataFrame, key: String): DataFrame = {
     if (df.isStreaming) return df
-    val shuffled = df.queryExecution.sparkPlan.find(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]).isDefined
-    if (shuffled) return df
+    val prepared: SparkPlan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // initial plan until executed
+      case p => p
+    }
+    if (prepared.exists(p => p.isInstanceOf[Exchange] || p.subqueries.nonEmpty))
+      return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target, col(key))
     else df

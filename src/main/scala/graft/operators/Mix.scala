@@ -87,8 +87,8 @@ object Mix {
     *
     * Scale shape: ONE partial-aggregable per-domain aggregation of the
     * per-doc excess (sorted fold, 6dp), then everything else runs on
-    * the domain-sized summary (k and Σα are one-row sorted folds,
-    * broadcast back). `losses` carries one row per doc with `domainCol`,
+    * the domain-sized summary (k and Σα are global windows over it,
+    * Σα a sorted fold). `losses` carries one row per doc with `domainCol`,
     * `lossCol`, `refCol`; docs scored by only one model should be
     * dropped upstream. Output: domain, n, excess, weight (6dp). */
   def doremiWeights(losses: DataFrame, domainCol: String = "lang",
@@ -102,13 +102,17 @@ object Mix {
       count(lit(1)).as("n"),
       round(aggregate(sort_array(collect_list(col("x"))), lit(0d), _ + _) /
         count(lit(1)), 6).as("excess"))
-    val k = dom.agg(count(lit(1)).as("k"))
-    val withA = dom.crossJoin(broadcast(k))
+    // k and Σα as global windows over the domain summary (the
+    // temperatureWeights idiom): a separate `dom.agg(count)` would only
+    // count rows, so column pruning would strip every value column
+    // from the whole loss pipeline under it, planning a second,
+    // keys-only copy of that pipeline that no exchange can reuse.
+    val w = org.apache.spark.sql.expressions.Window.partitionBy()
+    dom.withColumn("k", count(lit(1)).over(w))
       .withColumn("a",
         (lit(1.0) / col("k")) * (lit(1.0) + lit(eta) * col("excess")))
-    val z = withA.agg(
-      aggregate(sort_array(collect_list(col("a"))), lit(0d), _ + _).as("z"))
-    withA.crossJoin(broadcast(z))
+      .withColumn("z",
+        aggregate(sort_array(collect_list(col("a")).over(w)), lit(0d), _ + _))
       .select(col("domain"), col("n"), col("excess"),
         round(lit(1 - eps) * (col("a") / col("z")) + lit(eps) / col("k"), 6)
           .as("weight"))

@@ -184,12 +184,19 @@ object Curate {
     // Runs AFTER line-level boilerplate strip (which may have removed
     // the shared chrome and saved the doc) and BEFORE dedup. Sub-n
     // docs (null fraction) pass — they carry no measured gram mass.
+    // The gated corpus is CHECKPOINTED (file invariant): the dedup
+    // stage reads it from several branches (its shingles, the verified-
+    // pair checkpoint, the survivor join), and every later checkpoint
+    // would otherwise re-run the gate under it. The boilerplate branch
+    // has already checkpointed `gated`.
     val gatedC = commonalityMax match {
-      case None => gated
+      case None if boilerplateMaxDocs.isDefined => gated
+      case None => gated.checkpoint()
       case Some(mx) => gated.join(
         Dedup.ngramCommonality(gated)
           .filter(col("common_frac").isNull || col("common_frac") <= mx)
           .select("doc_id"), "doc_id")
+        .checkpoint()
     }
     val afterCommonality =
       if (commonalityMax.isDefined) countIf(gatedC) else -1L

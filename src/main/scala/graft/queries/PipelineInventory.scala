@@ -2390,7 +2390,12 @@ object PipelineInventory {
     // distinct-pair folds, domain-sized sorted folds for k and Z).
     QueryDef("p56_doremi_mix", {
       (s, d) => {
-        val docs = T(s, d, "documents")
+        // doc_id is the table's key and never null. Stated once here,
+        // the null-id filter the joins below would infer reaches every
+        // copy of the LM subtrees alike, so ReuseExchange collapses
+        // them; inferred, it reached the scoring copies but not the
+        // vocabulary ones and each ran twice.
+        val docs = T(s, d, "documents").filter(col("doc_id").isNotNull)
         val uni = TextAnalysis.unigramScore(docs)
           .select(col("doc_id"), (lit(1.0) - col("score")).as("loss"))
         val bi = TextAnalysis.bigramScore(docs)
@@ -3131,7 +3136,10 @@ object PipelineInventory {
     // IEEE cross-engine.
     QueryDef("p52_rm3_expansion", {
       (s, d) => {
-        val docs = T(s, d, "documents")
+        // doc_id is the table's key and never null; stated once, the
+        // null-id filter the scoring joins infer reaches every copy of
+        // the postings alike (the p56 reason), so one scan serves them.
+        val docs = T(s, d, "documents").filter(col("doc_id").isNotNull)
         TextAnalysis.rm3TopK(docs,
             docs.filter(col("doc_id") < 3)
               .select(col("doc_id").as("q_id"), col("text").as("qtext")),

@@ -283,6 +283,53 @@ class MixSpec extends SparkSpec {
     assert(out.count() > 0)
   }
 
+  // doremiWeights' earlier form: k and Z as one-row aggregates crossed
+  // back onto the domain summary. The window form must equal it bit
+  // for bit.
+  private def doremiCrossJoin(losses: org.apache.spark.sql.DataFrame,
+      eta: Double, eps: Double): org.apache.spark.sql.DataFrame = {
+    val ex = losses.select(col("lang").as("domain"),
+      greatest(col("loss") - col("ref_loss"), lit(0.0)).as("x"))
+    val dom = ex.groupBy("domain").agg(
+      count(lit(1)).as("n"),
+      round(aggregate(sort_array(collect_list(col("x"))), lit(0d), _ + _) /
+        count(lit(1)), 6).as("excess"))
+    val k = dom.agg(count(lit(1)).as("k"))
+    val withA = dom.crossJoin(broadcast(k))
+      .withColumn("a",
+        (lit(1.0) / col("k")) * (lit(1.0) + lit(eta) * col("excess")))
+    val z = withA.agg(
+      aggregate(sort_array(collect_list(col("a"))), lit(0d), _ + _).as("z"))
+    withA.crossJoin(broadcast(z))
+      .select(col("domain"), col("n"), col("excess"),
+        round(lit(1 - eps) * (col("a") / col("z")) + lit(eps) / col("k"), 6)
+          .as("weight"))
+  }
+
+  private def bits(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long, Long)] =
+    df.orderBy("domain").collect().toSeq.map(r => (r.getString(0), r.getLong(1),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+
+  test("doremiWeights equals its crossJoin form bit for bit: many, one, no and null domains") {
+    val many = (1 to 60).map { i =>
+      (i.toLong, s"d${i % 7}", (i * 37 % 101) / 101.0, (i * 53 % 97) / 97.0)
+    }
+    val cases = Seq(
+      "several domains" -> many,
+      "one domain" -> many.map { case (i, _, l, r) => (i, "en", l, r) },
+      "empty input" -> Seq.empty[(Long, String, Double, Double)],
+      "null domain group" -> many.map { case (i, d, l, r) =>
+        (i, if (i % 5 == 0) null else d, l, r) })
+    for ((name, rows) <- cases; (eta, eps) <- Seq((1.0, 0.1), (2.0, 0.0), (0.3, 0.5))) {
+      val losses = rows.toDF("doc_id", "lang", "loss", "ref_loss")
+      val got = bits(Mix.doremiWeights(losses, eta = eta, eps = eps))
+      assert(got == bits(doremiCrossJoin(losses, eta, eps)), s"$name eta=$eta eps=$eps")
+      if (name == "empty input") assert(got.isEmpty)
+      if (name == "null domain group") assert(got.exists(_._1 == null))
+    }
+  }
+
   test("weightedSample: deterministic, partition-invariant, weight-respecting") {
     val docs = spark.range(200)
       .select(col("id").as("doc_id"),

@@ -11,11 +11,13 @@ package graft
   * codegen stages are visible. */
 class PlanSpec extends SparkSpec {
 
-  private def executedPlan(name: String): String = {
+  private def finalPlan(name: String): org.apache.spark.sql.execution.SparkPlan = {
     val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
     df.collect()
-    df.queryExecution.executedPlan.toString
+    df.queryExecution.executedPlan
   }
+
+  private def executedPlan(name: String): String = finalPlan(name).toString
 
   test("equality filter pushes into the parquet scan") {
     val p = executedPlan("q03_eq_filter")
@@ -114,6 +116,30 @@ class PlanSpec extends SparkSpec {
       analyzed.toLowerCase.contains("broadcast"), analyzed.take(800))
     df.collect()
     assert(df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+  }
+
+  /** FileSourceScans of `table` in an AQE-final plan (reused exchanges
+    * and broadcasts are not scans). */
+  private def scansOf(p: org.apache.spark.sql.execution.SparkPlan, table: String): Int =
+    p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        scansOf(a.executedPlan, table)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scansOf(q.plan, table)
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        if (f.relation.location.rootPaths.exists(_.getName == s"$table.parquet")) 1 else 0
+      case o => o.children.map(scansOf(_, table)).sum + o.subqueries.map(scansOf(_, table)).sum
+    }
+
+  test("doremi and rm3 read the corpus a bounded number of times (shared LM/postings subtrees)") {
+    // Each copy of a corpus subtree that ReuseExchange cannot collapse
+    // is one more scan: a keys-only copy pruned under a count-only
+    // consumer, or a copy that got a join-inferred null filter its
+    // siblings did not.
+    for ((q, bound) <- Seq("p56_doremi_mix" -> 5, "p52_rm3_expansion" -> 3)) {
+      val plan = finalPlan(q)
+      val n = scansOf(plan, "documents")
+      assert(n >= 1 && n <= bound, s"$q: $n documents scans\n$plan")
+    }
   }
 
   test("clusterSample: the k-row size table is broadcast (narrow keep filter)") {
@@ -277,9 +303,9 @@ class PlanSpec extends SparkSpec {
       "p55_ccnet_buckets",  // bigramScore's one-row corpus-total
                             // broadcast (the p37 shape); the cut join
                             // itself is lang-keyed, not cartesian
-      "p56_doremi_mix",     // both LM one-row totals (p32+p37 shapes)
-                            // plus doremiWeights' one-row k and Z
-                            // broadcasts over the domain summary
+      "p56_doremi_mix",     // both LM one-row totals (p32+p37 shapes);
+                            // doremiWeights' k and Z are global
+                            // windows, no longer crossJoins
       "p58_hard_negatives", // 5-query-vector broadcast (the p06 brute
                             // shape; the band filter is a narrow
                             // predicate before the top-k window)

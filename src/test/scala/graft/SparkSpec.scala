@@ -6,7 +6,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one fork, one session). */
+/** Shared local session for all suites (one fork, one session).
+  * Reliable checkpoints go to a temp dir of this JVM's own, deleted
+  * when the JVM exits, and are cleaned as their frames are collected
+  * (the `Sessions` setting), so test runs leave no checkpoint files. */
 object TestSession {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -15,8 +18,12 @@ object TestSession {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    val checkpoints = Files.createTempDirectory("graft-test-checkpoints")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(checkpoints.toFile))
+    s.sparkContext.setCheckpointDir(checkpoints.toString)
     graft.expressions.GraftFunctions.register(s)
     s
   }
