@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -123,25 +122,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Codegen class cache (STATIC conf — set before the session
-      // exists). The Spark default of 100 entries is smaller than ONE
-      // multi-stage query's generated-class count (projections,
-      // predicates, comparators, aggregates — dozens per stage), so a
-      // 25-stage plan evicts its own early fragments before its second
-      // rep and pays janino compilation twice; across 193 heterogeneous
-      // queries the cache thrashes continuously (r14 A/B, top-20
-      // subset: ~40 s -> ~35 s). Not core-count- or scale-dependent —
-      // any long-lived driver running many distinct queries wants this;
-      // env-overridable for A/B.
-      .config("spark.sql.codegen.cache.maxEntries",
-        Sessions.codegenCacheEntries)
-      .getOrCreate()
-    Sessions.warnIfStaticConfIgnored(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
     // Deterministic (sorted) order + one discarded warmup so the
     // first-measured query does not absorb JVM/codegen warmup, and a
     // cache clear per query AND per run so persisted intermediates

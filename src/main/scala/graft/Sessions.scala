@@ -11,14 +11,22 @@ import org.apache.spark.sql.SparkSession
   *  - graft's native expressions registered
   *
   * Local callers pass cores; a cluster deployment passes its own master
-  * and a shuffle-partition count ~2-3x total executor cores.
+  * and a shuffle-partition count ~2-3x total executor cores. Every
+  * session in the repository is built here: Bench, Verify, the tools
+  * and the test suites' shared session.
   */
 object Sessions {
 
-  /** The one source of the codegen-class-cache size (static conf, set
-    * before the session exists; see Bench.scala for the measured A/B).
-    * Shared by this builder and Bench's own driver-contract builder so
-    * the value cannot drift between them. */
+  /** The codegen-class-cache size (static conf, set before the session
+    * exists). The Spark default of 100 entries is smaller than ONE
+    * multi-stage query's generated-class count (projections,
+    * predicates, comparators, aggregates — dozens per stage), so a
+    * 25-stage plan evicts its own early fragments before its second
+    * rep and pays janino compilation twice; across 193 heterogeneous
+    * queries the cache thrashes continuously (r14 A/B, Bench top-20
+    * subset: ~40 s -> ~35 s). Not core-count- or scale-dependent — any
+    * long-lived driver running many distinct queries wants this;
+    * env-overridable for A/B. */
   private[graft] def codegenCacheEntries: String =
     sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000")
 
@@ -47,9 +55,7 @@ object Sessions {
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
-      // Static conf; Spark's 100-entry default is below one multi-stage
-      // query's generated-class count, so heterogeneous workloads
-      // recompile constantly (see Bench.scala for the measured A/B).
+      // Static conf; see codegenCacheEntries for the measured A/B.
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
       // GC-driven cleanup of reliable checkpoints (Dedup.components
       // checkpoints per iteration; without this a long-running stream

@@ -514,8 +514,9 @@ object TextAnalysis {
     * ascending sorted fold, the total rounded 6dp. (A first version
     * derived n in a SEPARATE aggregation joined back onto the counts:
     * Spark's ReuseExchange collapsed only one of the duplicate
-    * subtrees, so the corpus char explode ran twice — PlanProbe read 5
-    * documents FileScans. Folding n into the counts rollup halves the
+    * subtrees, so the corpus char explode ran twice — 5 documents
+    * FileScans in the AQE rendering, SCALE.md "r75/r76 re-planned to one
+    * corpus scan each". Folding n into the counts rollup halves the
     * corpus passes; the term arithmetic is unchanged expression for
     * expression, so the digest is identical.)
     * Null/empty text keeps a visible row (n_chars 0, entropy null).

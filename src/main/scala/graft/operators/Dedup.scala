@@ -986,7 +986,8 @@ object Dedup {
     * Porting it to the codegen'd `BloomFilterMightContain` over a
     * literal-bytes sketch (the [[graft.operators.Joins]] probe) was
     * A/B-measured and REJECTED: interleaved same-JVM reps at 200k
-    * generated docs ([[graft.tools.BdeconProbe]]) put the expression
+    * generated docs (SCALE.md, "Scale stress (r9)", the bdecon Bloom
+    * probe A/B) put the expression
     * form 0.5–1.2 s SLOWER per run (udf min 1.28 s vs expr min
     * 1.85 s; the udf won 6 of 7 interleaved pairs across two
     * sessions) — a literal ~1.2 MB sketch rides the serialized plan

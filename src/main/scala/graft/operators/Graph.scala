@@ -99,8 +99,9 @@ object Graph {
     // between-iteration pin the rank frame gets): every iteration joins
     // it, and without the pin each of the `iters` update jobs re-derives
     // it from the source scan (for the declared link-graph queries that
-    // is 2 corpus scans + a distinct PER ITERATION — r14 JobProfile
-    // measured the derivation re-running inside every iteration job).
+    // is 2 corpus scans + a distinct PER ITERATION — the r14 job
+    // profile in OPTIMIZATION_r14.md §1 measured the derivation
+    // re-running inside every iteration job).
     // nodes/deg then derive from the pinned edges, not the raw scan.
     // All pins below are LAZY localCheckpoints: each is materialized
     // inside its first consumer's job (n's count for e/nodes, the first

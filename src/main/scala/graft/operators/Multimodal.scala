@@ -803,8 +803,8 @@ object Multimodal {
     * of 64 bits (DC + the 31 AC terms above the strict median), so
     * pair distances are always EVEN; this edit lands 50 of the first
     * 100 pairs at distance 2, 45 at 0 and 5 at 4
-    * ([[graft.tools.P66Probe]] prints the parameter sweep and the
-    * full per-pair evidence; MultimodalSpec pins every distance).
+    * (COVERAGE.md's round-14 state records the parameters and the
+    * pair split; MultimodalSpec pins every distance).
     * p66's oracle asserts exactly the dist-2 pair set: the 0-pairs
     * prove the filter's lower bound, the 4-pairs its upper, and any
     * change to the hash moves some pair across a boundary. */

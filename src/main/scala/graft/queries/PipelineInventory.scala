@@ -2166,11 +2166,11 @@ object PipelineInventory {
     // the AC median. pHash sets exactly 32 of 64 bits, so distances
     // are always even: of the 100 planted pairs (doc_id < 200, the
     // sf-invariant slice), 50 land at distance 2, 45 at 0 and 5 at 4
-    // (tools.P66Probe derived the parameters; MultimodalSpec pins
-    // every distance). The oracle asserts exactly the dist-2 pair
-    // set: the 0-pairs prove the filter's lower bound, the 4-pairs
-    // its upper, and any hash change moves some pair across a
-    // boundary — planted ground truth at NONZERO distance, the same
+    // (COVERAGE.md's round-14 state records the parameters;
+    // MultimodalSpec pins every distance). The oracle asserts exactly
+    // the dist-2 pair set: the 0-pairs prove the filter's lower bound,
+    // the 4-pairs its upper, and any hash change moves some pair
+    // across a boundary — planted ground truth at NONZERO distance, the same
     // known-answer design as p63 one bit-flip further out.
     QueryDef("p66_image_phash_dist",
       (s, d) => Multimodal.nearDupImagesPHash(

@@ -1,6 +1,14 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, Partial}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+
 import graft.SparkEntry
 
 /** Writes PLANS.md: a plan FINGERPRINT for every registered query —
@@ -40,14 +48,28 @@ object Plans {
     "p63_image_phash", "p65_video_neardup", "r116_bigram_kn",
     "r117_drift_gate")
 
-  private def count(plan: String, needle: String): Int =
-    needle.r.findAllMatchIn(plan).size
+  /** Every node an executed plan ran, walked from its AQE-final form:
+    * query stages and subquery plans are walked into, while a reused
+    * exchange or subquery is a leaf, so shared work counts once. The
+    * plan string would not do: it also prints the "Initial Plan". */
+  def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+    case q: QueryStageExec => finalNodes(q.plan)
+    case o => o +: (o.children ++ o.subqueries).flatMap(finalNodes)
+  }
 
-  /** Whole-stage-codegen spans: the plan STRING marks them `*(id)`
-    * (the literal operator name only appears in formatted explain),
-    * so count distinct stage ids. */
-  private def codegenSpans(plan: String): Int =
-    "\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
+  /** exch, wsc, bhj, smj, shj, nlj, scan, clst of one executed plan. */
+  private def fingerprint(plan: SparkPlan): Seq[Int] = {
+    val nodes = finalNodes(plan)
+    def n(classes: Class[_]*): Int = nodes.count(p => classes.exists(_.isInstance(p)))
+    Seq(n(classOf[Exchange]), n(classOf[WholeStageCodegenExec]),
+      n(classOf[BroadcastHashJoinExec]), n(classOf[SortMergeJoinExec]),
+      n(classOf[ShuffledHashJoinExec]),
+      n(classOf[BroadcastNestedLoopJoinExec], classOf[CartesianProductExec]),
+      n(classOf[FileSourceScanExec]),
+      nodes.collect { case a: BaseAggregateExec => a.aggregateExpressions.count(e =>
+        e.mode == Partial && e.aggregateFunction.isInstanceOf[CollectList]) }.sum)
+  }
 
   def main(args: Array[String]): Unit = {
     val spark = graft.Sessions.local(8, "plans")
@@ -55,11 +77,13 @@ object Plans {
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan fingerprints + headline plans (sf0.001, AQE final)\n\n")
     sb.append("Generated by `runMain graft.tools.Plans`. The fingerprint table covers\n")
-    sb.append("EVERY registered query: `exch` = Exchange operators (shuffles +\n")
+    sb.append("EVERY registered query and counts operator nodes of the AQE-final\n")
+    sb.append("plan, query stages and subqueries included and reused exchanges and\n")
+    sb.append("subqueries once: `exch` = Exchange operators (shuffles +\n")
     sb.append("broadcasts), `wsc` = WholeStageCodegen spans, `bhj`/`smj`/`shj` = join\n")
     sb.append("strategies, `nlj` = nested-loop/cartesian (0 everywhere by design —\n")
-    sb.append("broadcast 1-row/tiny-aggregate crossJoins excepted), `scan` = parquet\n")
-    sb.append("scans, `clst` = collect_list aggregates (a group-sized array in ONE\n")
+    sb.append("broadcast 1-row/tiny-aggregate crossJoins excepted), `scan` = file\n")
+    sb.append("scans, `clst` = partial collect_list aggregates (a group-sized array in ONE\n")
     sb.append("buffer — only per-doc bounded chunk/passage rebuilds and top-k-bounded\n")
     sb.append("fit frames may carry them; r103's 8 are the OLS sorted folds over the\n")
     sb.append("limit(200) token head, never corpus rows).\n")
@@ -77,18 +101,9 @@ object Plans {
     val rows = names.map { name =>
       val df = SparkEntry.queries(name)(spark, sf)
       df.collect()
-      val plan = df.queryExecution.executedPlan.toString
+      val executed = df.queryExecution.executedPlan
       spark.catalog.clearCache()
-      val fp = Seq(
-        count(plan, "Exchange"),
-        codegenSpans(plan),
-        count(plan, "BroadcastHashJoin"),
-        count(plan, "SortMergeJoin"),
-        count(plan, "ShuffledHashJoin"),
-        count(plan, "BroadcastNestedLoopJoin") + count(plan, "CartesianProduct"),
-        count(plan, "Scan parquet"),
-        count(plan, "partial_collect_list"))
-      (name, fp, plan)
+      (name, fingerprint(executed), executed.toString)
     }
     sb.append("| query | exch | wsc | bhj | smj | shj | nlj | scan | clst |\n")
     sb.append("|---|---|---|---|---|---|---|---|---|\n")

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.Sessions
 import graft.functions.TextAnalysis
 import graft.gen.DataGen
-import graft.operators.{Ann, Dedup, Mix}
+import graft.operators.{Ann, Dedup, Mix, Multimodal}
 import graft.pipelines.Curate
+import graft.streaming.Ingest
 
 /** Scale-stress harness: runs the heavy curation/dedup/ANN operators
   * over a [[graft.gen.DataGen.documents]] corpus at 10×-100×+ the
@@ -29,8 +30,13 @@ import graft.pipelines.Curate
   *   url,drift,span,sdecon,wfp,bdecon,prassoc,prexact,entres,routlier,
   *   routlierx,binjoin,ghll,psi,winsor,funnel,retention,psiby,winsorby,
   *   transitions,transhot,transhotb,lshpairs,ivfpqidx,entinc,cov,
-  *   pcaproj,leak,zipf
-  * The generated corpus is cached under `baseDir/n<N>` and reused.
+  *   pcaproj,leak,zipf,covby,edrift,phash,spectral,vidneardup,vidindex,
+  *   compact,ivfretrain
+  * The generated corpus is cached under `baseDir/n<N>` and reused. The
+  * media ops generate their fixtures from an id range, so their cost is
+  * the hashing and blocked join alone. The index-maintenance ops land
+  * their starting index or state before each rep, outside the timed
+  * region.
   * Emits one final JSON line (stress protocol, parsed by nothing —
   * recorded into SCALE.md by hand).
   */
@@ -48,7 +54,8 @@ object Stress {
     "entres", "routlier", "routlierx", "binjoin", "ghll", "psi", "winsor",
     "funnel", "retention", "psiby", "winsorby", "transitions",
     "transhot", "transhotb", "lshpairs", "ivfpqidx", "entinc",
-    "cov", "pcaproj", "leak", "zipf", "covby", "edrift")
+    "cov", "pcaproj", "leak", "zipf", "covby", "edrift", "phash",
+    "spectral", "vidneardup", "vidindex", "compact", "ivfretrain")
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Stress <nDocs> [ops-csv] [baseDir]")
@@ -93,6 +100,52 @@ object Stress {
 
     // ~49.5 words/doc by construction; budget = roughly half the corpus
     val budgetTokens = n * 25L
+    val ids = spark.range(n).toDF("doc_id")
+    val videoIndex = s"$dir/video_index.parquet"
+    val deltaState = s"$dir/delta_state"
+    val ivfIndex = s"$dir/ivf_retrain"
+
+    /** Starting state an op consumes or rewrites, landed before each rep
+      * (outside the timed region). */
+    def prep(op: String): Unit = op match {
+      case "vidindex" =>
+        // the EVEN-id fixtures (distinct textures) of [0, 2n)
+        Multimodal.writeFrameIndex(
+          Multimodal.videoFixtures(ids.select((col("doc_id") * 2).as("doc_id"))),
+          videoIndex)
+      case "compact" =>
+        // 256 batch partitions of about 4 files each: the small-file
+        // shape a maxFilesPerTrigger=1 stream leaves behind
+        spark.range(n).select(col("id").as("doc_id"),
+            hash(col("id")).cast("long").as("fhash"),
+            (col("id") % 256).as("batch_id"))
+          .repartition(1024, col("batch_id"), col("doc_id") % 4)
+          .write.mode("overwrite").partitionBy("batch_id").parquet(deltaState)
+      case "ivfretrain" =>
+        // 16-dim vectors with a fixed seed of 32 centroids
+        val vecs = spark.range(n).select(col("id").as("vec_id"),
+          expr("transform(sequence(0, 15), j -> " +
+            "cast(pmod(hash(id, j), 997) as float) / 997.0f)").as("embedding"))
+        Ann.writeIvfIndex(vecs, vecs.limit(32), ivfIndex)
+      case _ =>
+    }
+
+    // a 2-out-degree modular link graph on n nodes
+    def linkGraph: DataFrame = Seq(7 -> 1, 13 -> 5)
+      .map { case (a, b) => docs.select(col("doc_id").as("src"),
+        ((col("doc_id") * a + b) % n).as("dst")) }
+      .reduce(_ unionByName _)
+      .filter(col("src") =!= col("dst")).filter(col("src") % 11 =!= 0).distinct()
+
+    // a synthetic event stream from the doc corpus: 5 event types,
+    // timestamps spread over ~2 months
+    def events(user: org.apache.spark.sql.Column): DataFrame = docs.select(
+      user.as("user_id"),
+      element_at(array(lit("view"), lit("click"), lit("purchase"),
+        lit("other"), lit("view")),
+        (col("doc_id") % 5 + 1).cast("int")).as("event_type"),
+      timestamp_seconds(lit(1704067200L) + (col("doc_id") * 37) % 5000000)
+        .as("ts"))
 
     def mk(op: String): DataFrame = op match {
       case "gate" => TextAnalysis.qualityGate(docs)
@@ -193,27 +246,11 @@ object Stress {
         // 3 power iterations over a 2-out-degree modular graph on n
         // nodes: per iteration one edge join + one dst-keyed agg +
         // a 1-row dangling aggregate; localCheckpoint bounds lineage
-        val e1 = docs.select(col("doc_id").as("src"),
-          ((col("doc_id") * 7 + 1) % n).as("dst"))
-        val e2 = docs.select(col("doc_id").as("src"),
-          ((col("doc_id") * 13 + 5) % n).as("dst"))
-        graft.operators.Graph.pagerank(
-          e1.unionByName(e2)
-            .filter(col("src") =!= col("dst"))
-            .filter(col("src") % 11 =!= 0).distinct(),
-          iters = 3, damping = 0.5)
+        graft.operators.Graph.pagerank(linkGraph, iters = 3, damping = 0.5)
       case "hits" =>
         // 2 HITS iterations on the pagerank row's graph: four keyed
         // joins/aggs + four 1-row normalization totals per round
-        val e1 = docs.select(col("doc_id").as("src"),
-          ((col("doc_id") * 7 + 1) % n).as("dst"))
-        val e2 = docs.select(col("doc_id").as("src"),
-          ((col("doc_id") * 13 + 5) % n).as("dst"))
-        graft.operators.Graph.hits(
-          e1.unionByName(e2)
-            .filter(col("src") =!= col("dst"))
-            .filter(col("src") % 11 =!= 0).distinct(),
-          iters = 2)
+        graft.operators.Graph.hits(linkGraph, iters = 2)
       case "html" =>
         // the zeroth web-curation stage: one codegen'd regexp chain
         // over a synthetic page wrapping each doc — pure narrow map
@@ -375,13 +412,7 @@ object Stress {
         // synthetic event stream from the doc corpus: ~20 events/user,
         // 5 event types, timestamps spread over ~2 months — funnel is
         // k-1 users-sized joins, retention two partial-agg passes
-        val ev = docs.select(
-          (col("doc_id") % lit(math.max(n / 20, 1))).as("user_id"),
-          element_at(array(lit("view"), lit("click"), lit("purchase"),
-            lit("other"), lit("view")),
-            (col("doc_id") % 5 + 1).cast("int")).as("event_type"),
-          timestamp_seconds(lit(1704067200L) + (col("doc_id") * 37) % 5000000)
-            .as("ts"))
+        val ev = events(col("doc_id") % lit(math.max(n / 20, 1)))
         if (op == "funnel")
           graft.operators.Behavior.funnelCounts(ev,
             Seq("view", "click", "purchase"), within = Some("14 DAYS"))
@@ -390,13 +421,7 @@ object Stress {
         // per-user adjacency window + two summary-sized aggregations;
         // the claim under test is user-partitioned (never global)
         // sorting — a power user costs one sorted partition
-        val ev = docs.select(
-          (col("doc_id") % lit(math.max(n / 20, 1))).as("user_id"),
-          element_at(array(lit("view"), lit("click"), lit("purchase"),
-            lit("other"), lit("view")),
-            (col("doc_id") % 5 + 1).cast("int")).as("event_type"),
-          timestamp_seconds(lit(1704067200L) + (col("doc_id") * 37) % 5000000)
-            .as("ts"))
+        val ev = events(col("doc_id") % lit(math.max(n / 20, 1)))
         graft.operators.Behavior.transitionMatrix(ev)
       case "psiby" =>
         // grouped numeric drift, 16 segments x 1024 bins: same two
@@ -429,14 +454,8 @@ object Stress {
         // task; the bucketed sibling splits it across hour-grid cells
         // (~72 events/cell) and pays two summary-sized extra aggs.
         val nu = math.max(n / 20, 2L)
-        val ev = docs.select(
-          when(col("doc_id") % 10 === 0, lit(0L))
-            .otherwise(col("doc_id") % nu).as("user_id"),
-          element_at(array(lit("view"), lit("click"), lit("purchase"),
-            lit("other"), lit("view")),
-            (col("doc_id") % 5 + 1).cast("int")).as("event_type"),
-          timestamp_seconds(lit(1704067200L) + (col("doc_id") * 37) % 5000000)
-            .as("ts"))
+        val ev = events(when(col("doc_id") % 10 === 0, lit(0L))
+          .otherwise(col("doc_id") % nu))
         if (op == "transhot") graft.operators.Behavior.transitionMatrix(ev)
         else graft.operators.Behavior.transitionMatrixBucketed(ev,
           date_trunc("hour", col("ts")))
@@ -520,6 +539,35 @@ object Stress {
         // d-row pooled spine broadcast; expect ~linear in n with a
         // much smaller constant than covby
         Ann.embeddingDriftBy(emb, "label")
+      case "phash" =>
+        // r13 perceptual image dedup: DCT hash + blocked hamming join
+        Multimodal.nearDupImagesPHash(Multimodal.pHashImageFixtures(ids), maxDist = 0)
+      case "spectral" =>
+        Multimodal.nearDupAudioSpectral(Multimodal.spectralAudioFixtures(ids),
+          maxDist = 0)
+      case "vidneardup" =>
+        // 6 frames per video, frame-fingerprint pairs grouped per video
+        Multimodal.nearDupVideos(Multimodal.videoFixtures(ids))
+      case "vidindex" =>
+        // r14: a fixed 10k-video batch (5k trimmed+graded twins of
+        // indexed videos, 5k fresh) against the n-video frame index:
+        // the claim under test is that per-batch cost is the batch's
+        // decode+hash plus a fingerprint-keyed join, not a function of
+        // the indexed corpus (old videos are ~16-byte rows)
+        val batch = Multimodal.videoFixtures(
+          spark.range(5000L).select((col("id") * 2 + 1).as("doc_id"))
+            .unionByName(spark.range(5000L)
+              .select((lit(2L) * n + col("id") * 2).as("doc_id"))))
+        Multimodal.dedupVideosAgainstIndex(batch, spark.read.parquet(videoIndex))
+      case "compact" =>
+        // r14: fold the 256 fragmented partitions, then read the state
+        // back (the read a resumed stream pays)
+        Ingest.compactStreamState(spark, deltaState)
+        spark.read.parquet(deltaState)
+      case "ivfretrain" =>
+        // r14 retrain-and-swap, the maintenance job the drift signal
+        // schedules: Lloyd to tolerance + rebuild + promote
+        Ann.retrainIvfIndex(spark, ivfIndex, k = 32)
     }
 
     // This sandbox is a microVM with invisible neighbor load (see
@@ -533,6 +581,7 @@ object Stress {
       val out = s"$dir/out_$op.parquet"
       val load = osBean.getSystemLoadAverage
       val dt = (1 to reps).map { _ =>
+        prep(op)
         val (_, d) = timed {
           mk(op).write.mode("overwrite").parquet(out)
         }

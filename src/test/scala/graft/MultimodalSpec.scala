@@ -481,9 +481,9 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("p66 fixture: localized luma edit lands planted pairs at the pinned even distances (nonzero-hamming contract)") {
-    // the full per-pair evidence tools.P66Probe derived (step=53,
-    // delta=32): pHash distances of the first 100 planted pairs —
-    // pinned so any fixture or hash change fails fast, the literal
+    // the full per-pair evidence behind the p66 parameters that
+    // COVERAGE.md's round-14 state records (step=53, delta=32): pHash
+    // distances of the first 100 planted pairs — pinned so any fixture or hash change fails fast, the literal
     // source of p66's oracle IN-list
     val pinned = ("0,0,0,2,2,0,2,0,0,2,2,0,0,0,0,0,2,2,0,4,2,2,0,0,2,2," +
       "0,2,0,2,0,0,2,0,0,2,2,0,2,2,2,2,4,2,2,4,0,4,2,0,0,2,2,2,2,0,0,2," +

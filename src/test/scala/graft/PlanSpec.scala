@@ -121,13 +121,10 @@ class PlanSpec extends SparkSpec {
   /** FileSourceScans of `table` in an AQE-final plan (reused exchanges
     * and broadcasts are not scans). */
   private def scansOf(p: org.apache.spark.sql.execution.SparkPlan, table: String): Int =
-    p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scansOf(a.executedPlan, table)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scansOf(q.plan, table)
+    graft.tools.Plans.finalNodes(p).count {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        if (f.relation.location.rootPaths.exists(_.getName == s"$table.parquet")) 1 else 0
-      case o => o.children.map(scansOf(_, table)).sum + o.subqueries.map(scansOf(_, table)).sum
+        f.relation.location.rootPaths.exists(_.getName == s"$table.parquet")
+      case _ => false
     }
 
   test("doremi and rm3 read the corpus a bounded number of times (shared LM/postings subtrees)") {

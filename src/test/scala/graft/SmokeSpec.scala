@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.Tables
 
 /** t1 smoke (SURVEY §5.2.1): every fixture table loads with the
@@ -105,5 +107,27 @@ class SmokeSpec extends SparkSpec {
     // no-oracle entry (the sketch is engine-specific, the bound is not)
     assert(math.abs(approx - exact) <= math.max(1.0, exact * 0.05),
       s"approx $approx vs exact $exact")
+  }
+
+  test("the shared test session carries the Sessions invariants") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == Sessions.codegenCacheEntries)
+    val registry = spark.sessionState.functionRegistry
+    for (f <- Seq(graft.expressions.GraftFunctions.DotName,
+        graft.expressions.GraftFunctions.MightContainName))
+      assert(registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(f)), f)
+  }
+
+  test("sessions are built in Sessions.scala alone") {
+    val needle = "SparkSession" + ".builder()"
+    val builders = Seq("src/main", "src/test").flatMap { root =>
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filter(f => new String(java.nio.file.Files.readAllBytes(f), "UTF-8").contains(needle))
+    assert(builders.map(_.getFileName.toString) == Seq("Sessions.scala"), builders)
   }
 }
